@@ -146,7 +146,7 @@ object ConnectOmopVisitsApp {
       val result = ConnectOmopVisits.run(visits,
         inpatientHourDiffThreshold = a.getOrElse("inpatient_hour_diff_threshold", "24").toInt,
         outpatientHourDiffThreshold = a.getOrElse("outpatient_hour_diff_threshold", "1").toInt,
-        persistence = Some((spark, a("output_folder"))))
+        persistence = Some(a("output_folder")))
       result.visitOccurrence.write.mode("overwrite")
         .parquet(s"${a("output_folder")}/visit_occurrence")
       result.mapping.write.mode("overwrite")

@@ -76,10 +76,8 @@ object ArtificialVisits {
       .where(col("visit_occurrence_id").isNull)
       .withColumn("record_id", F.monotonically_increasing_id())
     // barrier: record_id must be stable before it keys the matching-rank window
-    eventsToFix = persistenceFolder match {
-      case Some(f) => Checkpoints.persist(eventsToFix, f, "events_to_fix/raw_events")
-      case None => Checkpoints.cut(eventsToFix)
-    }
+    eventsToFix = Checkpoints.stabilityBarrier(
+      eventsToFix, persistenceFolder, "events_to_fix/raw_events")
 
     val eventCols = eventsToFix.schema.fieldNames
     val ev = eventsToFix.drop("visit_occurrence_id").alias("event")
@@ -100,11 +98,9 @@ object ArtificialVisits {
           Seq(col("visit.visit_occurrence_id").as("visit_occurrence_id"),
             col("visit.visit_concept_id").as("visit_concept_id")): _*)
 
-    var linkedEvents = eventsWithVisit.where(col("visit_occurrence_id").isNotNull)
-    linkedEvents = persistenceFolder match {
-      case Some(f) => Checkpoints.persist(linkedEvents, f, "events_to_fix/linked_events")
-      case None => linkedEvents
-    }
+    val linkedEvents = Checkpoints.lineageBarrier(
+      eventsWithVisit.where(col("visit_occurrence_id").isNotNull),
+      persistenceFolder, "events_to_fix/linked_events")
 
     var orphanEvents = eventsWithVisit.where(col("visit_occurrence_id").isNull)
 
@@ -127,10 +123,8 @@ object ArtificialVisits {
 
     orphanEvents = orphanEvents.drop("visit_occurrence_id")
       .join(newVisitIds, Seq("person_id", "date"))
-    orphanEvents = persistenceFolder match {
-      case Some(f) => Checkpoints.persist(orphanEvents, f, "events_to_fix/events_artificial_visits")
-      case None => Checkpoints.cut(orphanEvents)
-    }
+    orphanEvents = Checkpoints.stabilityBarrier(
+      orphanEvents, persistenceFolder, "events_to_fix/events_artificial_visits")
 
     val artificialVisitsAgg = orphanEvents
       .groupBy("visit_occurrence_id", "person_id")

@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession, functions => F}
 import org.apache.spark.sql.functions.{col, lit, when}
 import org.apache.spark.sql.types.{DateType, FloatType, StringType, TimestampType}
 
-import graft.core.{Checkpoints, Tables}
+import graft.core.Checkpoints
 import graft.omop.OmopSchema._
 
 /**
@@ -106,17 +106,15 @@ object Events {
    */
   def numericEvents(domainTable: DataFrame, concept: DataFrame, keys: DomainKeys,
                     aggregateByHour: Boolean = false,
-                    persistence: Option[(SparkSession, String)] = None,
+                    persistence: Option[String] = None,
                     refresh: Boolean = false): DataFrame = {
     val domainName = keys.domainTableName.split("_")(0)
     val processedName = s"processed_$domainName"
 
-    persistence match {
-      case Some((spark, folder)) if !refresh &&
-          new java.io.File(s"$folder/$processedName").exists() =>
-        return Preprocess.normalize(spark.read.parquet(s"$folder/$processedName"))
-      case _ =>
-    }
+    val spark = domainTable.sparkSession
+    val processed = persistence.map(folder => s"$folder/$processedName")
+    if (!refresh && processed.exists(Checkpoints.exists(spark, _)))
+      return Preprocess.normalize(spark.read.parquet(processed.get))
 
     // device_exposure carries quantity (no value_as_concept_id); measurement
     // and observation carry value_as_number + value_as_concept_id
@@ -165,14 +163,7 @@ object Events {
           .drop("lab_hour")
       } else numeric
 
-    val out = numericOut.unionByName(nonNumeric)
-    persistence match {
-      case Some((spark, folder)) =>
-        val p = s"$folder/$processedName"
-        out.write.mode("overwrite").parquet(p)
-        spark.read.parquet(p)
-      case None => out
-    }
+    Checkpoints.lineageBarrier(numericOut.unionByName(nonNumeric), persistence, processedName)
   }
 
   /** Route a preprocessed domain table into unified events
@@ -181,7 +172,7 @@ object Events {
                             concept: Option[DataFrame] = None,
                             aggregateByHour: Boolean = false,
                             refresh: Boolean = false,
-                            persistence: Option[(SparkSession, String)] = None): DataFrame =
+                            persistence: Option[String] = None): DataFrame =
     getKeyFields(domainTable).map { keys =>
       if (isDomainNumeric(keys.domainTableName)) {
         val c = concept.getOrElse(throw new IllegalArgumentException(
@@ -226,7 +217,7 @@ object Events {
         concept = Some(concept),
         aggregateByHour = aggregateByHour,
         refresh = refreshMeasurement,
-        persistence = Some((spark, inputFolder)))
+        persistence = Some(inputFolder))
     }.reduce(_.unionByName(_))
 
     qualifiedConceptList.foreach { q =>
@@ -237,9 +228,7 @@ object Events {
       records = records.where(col("visit_occurrence_id").isNotNull).distinct()
 
     val person = Preprocess.domainTable(spark, inputFolder, Person)
-      .withColumn("birth_datetime",
-        F.coalesce(col("birth_datetime"),
-          F.concat(col("year_of_birth"), lit("-01-01")).cast(TimestampType)))
+      .withColumn("birth_datetime", Preprocess.birthDatetime)
 
     var out = records.join(person, "person_id")
       .withColumn("age", Sequences.ageAt(col("date"), col("birth_datetime")))

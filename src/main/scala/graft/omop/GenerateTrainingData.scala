@@ -3,8 +3,8 @@ package graft.omop
 import org.apache.spark.sql.{DataFrame, SparkSession, functions => F}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions.{col, lit, when}
-import org.apache.spark.sql.types.TimestampType
 
+import graft.core.Checkpoints
 import graft.functions.TimeTokens.AttType
 
 /**
@@ -60,7 +60,7 @@ object GenerateTrainingData {
         Events.invalidateVisitId(domainTable, visitOccurrence),
         concept = Some(concept),
         aggregateByHour = cfg.aggregateByHour,
-        persistence = cfg.outputFolder.map((spark, _)))
+        persistence = cfg.outputFolder)
     }.reduce(_.unionByName(_))
 
     val visitSlim = visitOccurrence.select("visit_occurrence_id", "visit_start_date",
@@ -68,9 +68,7 @@ object GenerateTrainingData {
       "visit_concept_id", "person_id", "discharged_to_concept_id")
 
     val person = Preprocess.domainTable(spark, cfg.inputFolder, OmopSchema.Person)
-      .select(col("person_id"),
-        F.coalesce(col("birth_datetime"),
-          F.concat(col("year_of_birth"), lit("-01-01")).cast(TimestampType)).as("birth_datetime"),
+      .select(col("person_id"), Preprocess.birthDatetime.as("birth_datetime"),
         col("race_concept_id"), col("gender_concept_id"))
 
     val visitPerson = visitSlim.join(person, "person_id")
@@ -88,10 +86,7 @@ object GenerateTrainingData {
     }
 
     // materialization barrier (generate_training_data.py:155-157)
-    cfg.outputFolder.foreach { folder =>
-      patientEvents.write.mode("overwrite").parquet(s"$folder/all_patient_events")
-      patientEvents = spark.read.parquet(s"$folder/all_patient_events")
-    }
+    patientEvents = Checkpoints.lineageBarrier(patientEvents, cfg.outputFolder, "all_patient_events")
 
     // re-link / mint artificial visits between the barrier and the age
     // filter (generate_training_data.py:158-167). Parity note: like the
@@ -160,18 +155,11 @@ object GenerateTrainingData {
     * when present, write train/test dirs, else one dir. */
   def write(spark: SparkSession, cfg: Config, seqData: DataFrame, outputFolder: String): Unit = {
     val splitsPath = s"${cfg.inputFolder}/patient_splits"
-    if (new java.io.File(splitsPath).exists()) {
-      val splits = spark.read.parquet(splitsPath)
-      val temp = s"$outputFolder/patient_sequence/temp"
-      seqData.join(splits.select("person_id", "split"), "person_id")
-        .write.mode("overwrite").parquet(temp)
-      val tagged = spark.read.parquet(temp)
-      tagged.where(col("split") === "train")
-        .write.mode("overwrite").parquet(s"$outputFolder/patient_sequence/train")
-      tagged.where(col("split") === "test")
-        .write.mode("overwrite").parquet(s"$outputFolder/patient_sequence/test")
-    } else {
-      seqData.write.mode("overwrite").parquet(s"$outputFolder/patient_sequence")
-    }
+    val sink = s"$outputFolder/patient_sequence"
+    if (Checkpoints.exists(spark, splitsPath))
+      Checkpoints.writeSplits(
+        seqData.join(spark.read.parquet(splitsPath).select("person_id", "split"), "person_id"), sink)
+    else
+      seqData.write.mode("overwrite").parquet(sink)
   }
 }

@@ -1,8 +1,10 @@
 package graft.omop
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession, functions => F}
+import org.apache.spark.sql.functions.{col, lit}
+import org.apache.spark.sql.types.TimestampType
 
-import graft.core.Tables
+import graft.core.{Checkpoints, Tables}
 
 /**
  * Table-level normalization: lowercase columns, convention-cast date/datetime
@@ -14,6 +16,11 @@ object Preprocess {
 
   /** Lowercase + date/datetime casts (spark_utils.py:252-260). */
   def normalize(df: DataFrame): DataFrame = Tables.normalize(df)
+
+  /** A person row's birth timestamp: `birth_datetime`, else January 1 of
+    * `year_of_birth`. */
+  val birthDatetime: Column = F.coalesce(col("birth_datetime"),
+    F.concat(col("year_of_birth"), lit("-01-01")).cast(TimestampType))
 
   /** Full `preprocess_domain_table` semantics: concept tables pass through
     * untouched; visit_occurrence gets the CDM 5.2→5.3 rename; drug/condition/
@@ -38,7 +45,7 @@ object Preprocess {
       Tables.normalize(spark.read.parquet(s"$inputFolder/$name"),
         renames = cdmRenames(name)))
 
-    def exists(t: String): Boolean = new java.io.File(s"$inputFolder/$t").exists()
+    def exists(t: String): Boolean = Checkpoints.exists(spark, s"$inputFolder/$t")
 
     if (withDrugRollup && name == OmopSchema.DrugExposure &&
         exists(OmopSchema.Concept) && exists(OmopSchema.ConceptAncestor)) {

@@ -3,7 +3,7 @@ package graft.omop
 import org.apache.spark.sql.{Column, DataFrame, functions => F}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions.{col, lit, when}
-import org.apache.spark.sql.types.{ArrayType, IntegerType, TimestampType}
+import org.apache.spark.sql.types.{ArrayType, IntegerType}
 
 import graft.functions.TimeTokens.AttType
 import graft.omop.decorators._
@@ -296,10 +296,7 @@ object Sequences {
         "prolonged_stay", "is_readmission", "is_inpatient", "time_interval_att",
         "visit_rank_order", "visit_start_date", "visit_segment")
 
-    val personBirth = person.select(
-      col("person_id"),
-      F.coalesce(col("birth_datetime"),
-        F.concat(col("year_of_birth"), lit("-01-01")).cast(TimestampType)).as("birth_datetime"))
+    val personBirth = person.select(col("person_id"), Preprocess.birthDatetime.as("birth_datetime"))
 
     visits.join(personBirth, "person_id")
   }

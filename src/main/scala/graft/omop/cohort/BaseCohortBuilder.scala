@@ -34,21 +34,16 @@ final class BaseCohortBuilder(
 
   val cohortRequiredColumns = Seq("person_id", "index_date", "visit_occurrence_id")
 
-  private val cohortSlug = queryBuilder.cohortName.toLowerCase.replaceAll("[^a-z0-9]+", "_")
-  val outputDataFolder = s"$outputFolder/$cohortSlug"
+  val outputDataFolder = BaseCohortBuilder.cohortFolder(outputFolder, queryBuilder.cohortName)
 
-  val DefaultDependency: Seq[String] = Seq("person", "visit_occurrence",
-    "observation_period", "concept", "concept_ancestor", "concept_relationship")
+  val DefaultDependency: Seq[String] = BaseCohortBuilder.DefaultDependency
 
   private var dependencyDict: Map[String, DataFrame] = Map.empty
 
   /** Register dependency tables as global temp views (spark_app_base.py:68-74). */
   def instantiateDependencies(spark: SparkSession): Map[String, DataFrame] = {
-    dependencyDict = (queryBuilder.dependencyList ++ DefaultDependency).distinct.map { name =>
-      val table = Preprocess.domainTable(spark, inputFolder, name)
-      table.createOrReplaceGlobalTempView(name)
-      name -> table
-    }.toMap
+    dependencyDict = BaseCohortBuilder.registerDependencies(spark, inputFolder,
+      queryBuilder.dependencyList ++ DefaultDependency)
     dependencyDict
   }
 
@@ -135,4 +130,26 @@ final class BaseCohortBuilder(
   }
 
   def loadCohort(spark: SparkSession): DataFrame = spark.read.parquet(outputDataFolder)
+}
+
+object BaseCohortBuilder {
+
+  /** Tables every cohort build reads through global temp views. */
+  val DefaultDependency: Seq[String] = Seq("person", "visit_occurrence",
+    "observation_period", "concept", "concept_ancestor", "concept_relationship")
+
+  /** `outputFolder/<slug>`, the slug being the lowercased cohort name with
+    * every run of other characters replaced by `_`. */
+  def cohortFolder(outputFolder: String, cohortName: String): String =
+    s"$outputFolder/${cohortName.toLowerCase.replaceAll("[^a-z0-9]+", "_")}"
+
+  /** Read each named table through [[Preprocess.domainTable]] and register
+    * it as a global temp view under its own name. */
+  def registerDependencies(spark: SparkSession, inputFolder: String,
+                           names: Seq[String]): Map[String, DataFrame] =
+    names.distinct.map { name =>
+      val table = Preprocess.domainTable(spark, inputFolder, name)
+      table.createOrReplaceGlobalTempView(name)
+      name -> table
+    }.toMap
 }

@@ -2,8 +2,9 @@ package graft.omop.cohort
 
 import org.apache.spark.sql.{DataFrame, SparkSession, functions => F}
 import org.apache.spark.sql.expressions.Window
-import org.apache.spark.sql.functions.{col, lit}
+import org.apache.spark.sql.functions.col
 
+import graft.core.Checkpoints
 import graft.functions.TimeTokens.AttType
 import graft.omop.{ArtificialVisits, Events, OmopSchema, Preprocess, Sequences}
 
@@ -27,17 +28,12 @@ import graft.omop.{ArtificialVisits, Events, OmopSchema, Preprocess, Sequences}
 final class NestedCohortBuilder(cfg: NestedCohortBuilder.Config) {
   import NestedCohortBuilder._
 
-  private val outputDataFolder =
-    s"${cfg.outputFolder}/${cfg.cohortName.toLowerCase.replaceAll("[^a-z0-9]+", "_")}"
+  private val outputDataFolder = BaseCohortBuilder.cohortFolder(cfg.outputFolder, cfg.cohortName)
 
   def build(spark: SparkSession, targetCohortIn: DataFrame, outcomeCohort: DataFrame): DataFrame = {
     // dependencies for observation_period / person / visit_occurrence
-    val dependencies = Seq("person", "visit_occurrence", "observation_period",
-      "concept", "concept_ancestor", "concept_relationship").map { name =>
-      val t = Preprocess.domainTable(spark, cfg.inputFolder, name)
-      t.createOrReplaceGlobalTempView(name)
-      name -> t
-    }.toMap
+    val dependencies = BaseCohortBuilder.registerDependencies(spark, cfg.inputFolder,
+      BaseCohortBuilder.DefaultDependency)
 
     targetCohortIn.createOrReplaceGlobalTempView("target_cohort")
     outcomeCohort.createOrReplaceGlobalTempView("outcome_cohort")
@@ -135,23 +131,12 @@ final class NestedCohortBuilder(cfg: NestedCohortBuilder.Config) {
       case Some(splitsFolder) =>
         val splits = spark.read.parquet(splitsFolder)
         val cohortCols = cohort.columns
-        cohort.alias("cohort")
+        val tagged = cohort.alias("cohort")
           .join(splits.alias("split"), col(s"cohort.$personIdColumn") === col("split.person_id"))
           .select(cohortCols.map(c => col(s"cohort.$c").as(c)).toSeq :+
             col("split.split").as("split"): _*)
           .orderBy(personIdColumn, indexDateColumn)
-          .write.mode("overwrite").parquet(s"$outputDataFolder/temp")
-        val tagged = spark.read.parquet(s"$outputDataFolder/temp")
-        tagged.where(col("split") === "train")
-          .write.mode("overwrite").parquet(s"$outputDataFolder/train")
-        tagged.where(col("split") === "test")
-          .write.mode("overwrite").parquet(s"$outputDataFolder/test")
-        // the temp copy exists only to break lineage between the tag join
-        // and the two filtered writes; remove it like the reference does
-        // (shutil.rmtree, spark_app_base.py:607)
-        val tempPath = new org.apache.hadoop.fs.Path(s"$outputDataFolder/temp")
-        tempPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
-          .delete(tempPath, /* recursive = */ true)
+        Checkpoints.writeSplits(tagged, outputDataFolder)
       case None =>
         cohort.orderBy(personIdColumn, indexDateColumn)
           .write.mode("overwrite").parquet(s"$outputDataFolder/data")
@@ -208,9 +193,7 @@ final class NestedCohortBuilder(cfg: NestedCohortBuilder.Config) {
 
     if (cfg.shouldConstructArtificialVisits) {
       val person = dependencies("person")
-      val demographic = person.select(col("person_id"),
-        F.coalesce(col("birth_datetime"),
-          F.concat(col("year_of_birth"), lit("-01-01")).cast("timestamp")).as("birth_datetime"))
+      val demographic = person.select(col("person_id"), Preprocess.birthDatetime.as("birth_datetime"))
       val result = ArtificialVisits.construct(ehrRecords, visitOccurrence,
         persistenceFolder = if (cfg.cacheEvents) Some(outputDataFolder) else None,
         duplicateRecords = cfg.duplicateRecords,
@@ -243,9 +226,7 @@ final class NestedCohortBuilder(cfg: NestedCohortBuilder.Config) {
 
     if (cfg.isNewPatientRepresentation) {
       val person = dependencies("person")
-      val demographic = person.select(col("person_id"),
-        F.coalesce(col("birth_datetime"),
-          F.concat(col("year_of_birth"), lit("-01-01")).cast("timestamp")).as("birth_datetime"),
+      val demographic = person.select(col("person_id"), Preprocess.birthDatetime.as("birth_datetime"),
         col("race_concept_id"), col("gender_concept_id"))
       val visitPerson = visitOccurrence.join(demographic, "person_id")
         .withColumn("age", Sequences.ageAt(col("visit_start_date"), col("birth_datetime")))

@@ -32,5 +32,5 @@ trait PatientEventDecorator {
   }
 
   protected def tryPersist(df: DataFrame, sub: String): DataFrame =
-    Checkpoints.maybePersist(df, persistenceFolder, s"$name/$sub")
+    Checkpoints.lineageBarrier(df, persistenceFolder, s"$name/$sub")
 }

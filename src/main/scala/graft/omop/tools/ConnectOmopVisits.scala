@@ -1,6 +1,6 @@
 package graft.omop.tools
 
-import org.apache.spark.sql.{DataFrame, SparkSession, functions => F}
+import org.apache.spark.sql.{DataFrame, functions => F}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions.{col, lit, when}
 import org.apache.spark.sql.types.TimestampType
@@ -34,12 +34,10 @@ object ConnectOmopVisits {
     * the absorbed visits. */
   def connectChronologically(visitToFix0: DataFrame, visitOccurrence: DataFrame,
                              hourDiffThreshold: Int,
-                             persistence: Option[(SparkSession, String)],
+                             persistence: Option[String],
                              visitName: String): StepResult = {
-    def barrier(df: DataFrame, sub: String): DataFrame = persistence match {
-      case Some((_, folder)) => Checkpoints.persist(df, folder, s"${visitName}_$sub")
-      case None => Checkpoints.cut(df)
-    }
+    def barrier(df: DataFrame, sub: String): DataFrame =
+      Checkpoints.stabilityBarrier(df, persistence, s"${visitName}_$sub")
 
     val wOrder = Window.partitionBy("person_id").orderBy("visit_order")
     val visitToFix = barrier(visitToFix0
@@ -110,7 +108,7 @@ object ConnectOmopVisits {
       "visit_start_datetime", "visit_end_date", "visit_end_datetime")
 
   def step1ConsolidateInpatient(visitOccurrence: DataFrame, thresholdHours: Int,
-                                persistence: Option[(SparkSession, String)]): StepResult =
+                                persistence: Option[String]): StepResult =
     connectChronologically(
       spanColumns(visitOccurrence.where(col("visit_concept_id").isin(InpatientIds: _*))),
       visitOccurrence, thresholdHours, persistence, "inpatient")
@@ -118,23 +116,21 @@ object ConnectOmopVisits {
   /** Fold outpatient visits starting inside an inpatient span into that
     * inpatient visit (earliest inpatient id wins). */
   def step2ConnectOutpatientToInpatient(visitOccurrence: DataFrame,
-                                        persistence: Option[(SparkSession, String)]): StepResult = {
+                                        persistence: Option[String]): StepResult = {
     val inpatient = spanColumns(
       visitOccurrence.where(col("visit_concept_id").isin(InpatientIds: _*)))
     val outpatient = spanColumns(
       visitOccurrence.where(!col("visit_concept_id").isin(InpatientIds: _*)))
 
-    var mapping = inpatient.alias("in")
-      .join(outpatient.alias("out"),
-        col("in.person_id") === col("out.person_id") &&
-          col("in.visit_start_datetime") < col("out.visit_start_datetime") &&
-          col("out.visit_start_datetime") < col("in.visit_end_datetime"))
-      .groupBy(col("out.visit_occurrence_id").as("visit_occurrence_id"))
-      .agg(F.min("in.visit_occurrence_id").as("master_visit_occurrence_id"))
-    mapping = persistence match {
-      case Some((_, f)) => Checkpoints.persist(mapping, f, "out_to_in_visit_mapping")
-      case None => Checkpoints.cut(mapping)
-    }
+    val mapping = Checkpoints.stabilityBarrier(
+      inpatient.alias("in")
+        .join(outpatient.alias("out"),
+          col("in.person_id") === col("out.person_id") &&
+            col("in.visit_start_datetime") < col("out.visit_start_datetime") &&
+            col("out.visit_start_datetime") < col("in.visit_end_datetime"))
+        .groupBy(col("out.visit_occurrence_id").as("visit_occurrence_id"))
+        .agg(F.min("in.visit_occurrence_id").as("master_visit_occurrence_id")),
+      persistence, "out_to_in_visit_mapping")
 
     val fixed = visitOccurrence.join(
       mapping.select("visit_occurrence_id"), Seq("visit_occurrence_id"), "left_anti")
@@ -142,7 +138,7 @@ object ConnectOmopVisits {
   }
 
   def step3ConsolidateOutpatient(visitOccurrence: DataFrame, thresholdHours: Int,
-                                 persistence: Option[(SparkSession, String)]): StepResult =
+                                 persistence: Option[String]): StepResult =
     connectChronologically(
       spanColumns(visitOccurrence.where(!col("visit_concept_id").isin(InpatientIds: _*))),
       visitOccurrence, thresholdHours, persistence, "outpatient")
@@ -152,7 +148,7 @@ object ConnectOmopVisits {
   def run(visitOccurrence: DataFrame,
           inpatientHourDiffThreshold: Int = 24,
           outpatientHourDiffThreshold: Int = 1,
-          persistence: Option[(SparkSession, String)] = None): StepResult = {
+          persistence: Option[String] = None): StepResult = {
     val s1 = step1ConsolidateInpatient(visitOccurrence, inpatientHourDiffThreshold, persistence)
     val s2 = step2ConnectOutpatientToInpatient(s1.visitOccurrence, persistence)
     val s3 = step3ConsolidateOutpatient(s2.visitOccurrence, outpatientHourDiffThreshold, persistence)

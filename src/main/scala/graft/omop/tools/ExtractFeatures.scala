@@ -67,8 +67,8 @@ object ExtractFeatures {
   /** CSV (header + inferSchema) or recursive-glob parquet cohort scan
     * (extract_features.py:76-91; SURVEY §2.1 S8/S9). */
   def readCohort(spark: SparkSession, cfg: Config): DataFrame = {
-    val f = new java.io.File(cfg.cohortDir)
-    val isParquet = f.isDirectory || cfg.cohortDir.toLowerCase.endsWith(".parquet")
+    val isParquet = Checkpoints.status(spark, cfg.cohortDir).exists(_.isDirectory) ||
+      cfg.cohortDir.toLowerCase.endsWith(".parquet")
     val raw =
       if (isParquet)
         spark.read.option("recursiveFileLookup", "true").parquet(cfg.cohortDir)
@@ -101,10 +101,8 @@ object ExtractFeatures {
     val cohort = Checkpoints.persist(readCohort(spark, cfg), cohortFolder, "cohort")
 
     val person = Preprocess.domainTable(spark, cfg.inputFolder, OmopSchema.Person)
-    val birthDatetime = F.coalesce(col("birth_datetime"),
-      F.concat(col("year_of_birth"), lit("-01-01")).cast(TimestampType))
     val patientDemographic = person.select(col("person_id"),
-      birthDatetime.as("birth_datetime"), col("race_concept_id"), col("gender_concept_id"))
+      Preprocess.birthDatetime.as("birth_datetime"), col("race_concept_id"), col("gender_concept_id"))
 
     var ehrRecords = Events.extractEhrRecords(spark, cfg.inputFolder, cfg.ehrTableList,
       includeVisitType = cfg.includeVisitType,
@@ -228,12 +226,8 @@ object ExtractFeatures {
 
     cfg.patientSplitsFolder match {
       case Some(splitsFolder) =>
-        val splits = spark.read.parquet(splitsFolder)
-        val tagged = Checkpoints.persist(labeled.join(splits, "person_id"), cohortFolder, "temp")
-        tagged.where(col("split") === "train")
-          .write.mode("overwrite").parquet(s"$cohortFolder/train")
-        tagged.where(col("split") === "test")
-          .write.mode("overwrite").parquet(s"$cohortFolder/test")
+        Checkpoints.writeSplits(
+          labeled.join(spark.read.parquet(splitsFolder), "person_id"), cohortFolder)
       case None =>
         labeled.write.mode("overwrite").parquet(s"$cohortFolder/task_labels")
     }

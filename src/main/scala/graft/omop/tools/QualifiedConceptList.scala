@@ -31,7 +31,7 @@ object QualifiedConceptList {
       Events.extractEventsByDomain(
         Preprocess.domainTable(spark, inputFolder, name, withDrugRollup = withDrugRollup),
         concept = Some(concept),
-        persistence = Some((spark, inputFolder)))
+        persistence = Some(inputFolder))
     }.reduce(_.unionByName(_))
 
     events.where(col("visit_occurrence_id").isNotNull)

@@ -1,8 +1,9 @@
 package graft.omop.tools
 
-import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions.broadcast
+
+import graft.core.Checkpoints
 
 /**
  * Subset every OMOP table to a person sample — the standard way users carve a
@@ -27,13 +28,8 @@ object SampleOmopTables {
 
   def run(spark: SparkSession, personSamplePath: String, omopFolder: String,
           outputFolder: String): Unit = {
-    val hconf = spark.sparkContext.hadoopConfiguration
-    def exists(p: String): Boolean = {
-      val path = new Path(p)
-      path.getFileSystem(hconf).exists(path)
-    }
     val sample = spark.read.parquet(personSamplePath)
-    OmopTables.filter(t => exists(s"$omopFolder/$t")).foreach { t =>
+    OmopTables.filter(t => Checkpoints.exists(spark, s"$omopFolder/$t")).foreach { t =>
       sampleTable(spark.read.parquet(s"$omopFolder/$t"), sample)
         .write.mode("overwrite").parquet(s"$outputFolder/$t")
     }

@@ -35,7 +35,7 @@ class ToolsSpec extends SparkSpecBase {
       .withColumn("visit_end_date", col("e").cast("date"))
       .drop("s", "e")
 
-    val result = ConnectOmopVisits.run(visits, persistence = Some((spark, out)))
+    val result = ConnectOmopVisits.run(visits, persistence = Some(out))
     result.mapping.write.mode("overwrite").parquet(s"$out/visit_mapping")
     val mapped = result.mapping.select("visit_occurrence_id")
       .as[Long].collect().toSet
