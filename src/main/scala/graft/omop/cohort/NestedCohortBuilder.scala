@@ -24,11 +24,23 @@ import graft.omop.{ArtificialVisits, Events, OmopSchema, Preprocess, Sequences}
  * Scale hazards carried + mitigated: the global dense_rank for
  * cohort_member_id is the reference's own single-partition window over
  * cohort-sized data (rows ≪ events); every other window partitions by person.
+ *
+ * With `cacheEvents`, two lineage barriers join the decorators' checkpoints
+ * under the cohort folder: `cohort_members` (the labeled cohort after the
+ * positives-first safeguard and the single-contribution step) and
+ * `cohort_ehr_records` (the observation-window events per member, before
+ * feature assembly). `cohort_member_id` comes from the RDD-backed
+ * [[graft.operators.IdAllocator.denseKeyId]], which no plan can reuse, so
+ * without the cut every consumer of the cohort (both feature joins, the
+ * cohort index every decorator reads, the final join and the split sink)
+ * re-runs the labeling SQL, the range-partition sample and the sort, and
+ * every decorator barrier re-runs the member join.
  */
 final class NestedCohortBuilder(cfg: NestedCohortBuilder.Config) {
   import NestedCohortBuilder._
 
   private val outputDataFolder = BaseCohortBuilder.cohortFolder(cfg.outputFolder, cfg.cohortName)
+  private val cacheFolder = if (cfg.cacheEvents) Some(outputDataFolder) else None
 
   def build(spark: SparkSession, targetCohortIn: DataFrame, outcomeCohort: DataFrame): DataFrame = {
     // dependencies for observation_period / person / visit_occurrence
@@ -86,6 +98,7 @@ final class NestedCohortBuilder(cfg: NestedCohortBuilder.Config) {
             .orderBy(F.desc("label"), F.desc("index_date"))))
         .where(col("record_rank") === 1).drop("record_rank")
     }
+    cohort = Checkpoints.lineageBarrier(cohort, cacheFolder, "cohort_members")
 
     cohort =
       if (cfg.excludeFeatures) filterCohortWithEhrRecords(spark, cohort)
@@ -195,7 +208,7 @@ final class NestedCohortBuilder(cfg: NestedCohortBuilder.Config) {
       val person = dependencies("person")
       val demographic = person.select(col("person_id"), Preprocess.birthDatetime.as("birth_datetime"))
       val result = ArtificialVisits.construct(ehrRecords, visitOccurrence,
-        persistenceFolder = if (cfg.cacheEvents) Some(outputDataFolder) else None,
+        persistenceFolder = cacheFolder,
         duplicateRecords = cfg.duplicateRecords,
         disconnectProblemListRecords = cfg.disconnectProblemListRecords)
       visitOccurrence = result.visitOccurrence
@@ -214,12 +227,14 @@ final class NestedCohortBuilder(cfg: NestedCohortBuilder.Config) {
         col("cohort.cohort_member_id").as("cohort_member_id"): _*)
 
     val memberCols = withMember.columns
-    val cohortEhrRecords = withMember.alias("ehr")
-      .join(cohort.alias("cohort"),
-        col("ehr.person_id") === col("cohort.person_id") &&
-          col("ehr.cohort_member_id") === col("cohort.cohort_member_id"))
-      .where(ehrRecordFilter())
-      .select(memberCols.map(c => col(s"ehr.$c").as(c)).toSeq: _*)
+    val cohortEhrRecords = Checkpoints.lineageBarrier(
+      withMember.alias("ehr")
+        .join(cohort.alias("cohort"),
+          col("ehr.person_id") === col("cohort.person_id") &&
+            col("ehr.cohort_member_id") === col("cohort.cohort_member_id"))
+        .where(ehrRecordFilter())
+        .select(memberCols.map(c => col(s"ehr.$c").as(c)).toSeq: _*),
+      cacheFolder, "cohort_ehr_records")
 
     if (cfg.isFeatureConceptFrequency)
       return Sequences.createConceptFrequencyData(cohortEhrRecords, None)
@@ -241,7 +256,7 @@ final class NestedCohortBuilder(cfg: NestedCohortBuilder.Config) {
         excludeDemographic = cfg.excludeDemographic,
         useAgeGroup = cfg.useAgeGroup,
         includeInpatientHourToken = cfg.includeInpatientHourToken,
-        persistenceFolder = if (cfg.cacheEvents) Some(outputDataFolder) else None,
+        persistenceFolder = cacheFolder,
         cohortIndex = Some(cohort.select("person_id", "cohort_member_id", "index_date")))
     }
 

@@ -18,7 +18,12 @@ import org.scalatest.funsuite.AnyFunSuite
  *
  * No open-coded materialization: barriers, split sinks and path checks go
  * through [[graft.core.Checkpoints]]. `java.io.File` only sees the local
- * filesystem, so a `file:`/`hdfs:` URI silently reads as absent.
+ * filesystem, so a `file:`/`hdfs:` URI silently reads as absent. Nor does
+ * the OMOP code `cache()` or `persist()` a frame itself: a cache freezes the
+ * plan's shuffle width and is never released.
+ *
+ * No constant-key window (`Window.partitionBy(lit(...))`): it is an
+ * unpartitioned window under another name.
  */
 class WindowLintSpec extends AnyFunSuite {
 
@@ -58,6 +63,16 @@ class WindowLintSpec extends AnyFunSuite {
           line.contains("Checkpoints.maybePersist") || line.contains("Option[(SparkSession, String)]"))
     assert(found.isEmpty,
       s"materialize through graft.core.Checkpoints (barriers, writeSplits, exists/status):\n" +
+        found.mkString("\n"))
+  }
+
+  test("no cache, persist or constant-key window in the OMOP pipelines") {
+    val selfCached = "\\.cache\\(\\)|(?<!Checkpoints)\\.persist\\(".r
+    val found =
+      offenders(Seq("src/main/scala/graft/omop"))(line => selfCached.findFirstIn(line).isDefined) ++
+        offenders(lintedDirs)(_.contains("partitionBy(lit("))
+    assert(found.isEmpty,
+      s"materialize through graft.core.Checkpoints; mint global ids through IdAllocator:\n" +
         found.mkString("\n"))
   }
 }

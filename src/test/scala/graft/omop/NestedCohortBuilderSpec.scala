@@ -3,6 +3,7 @@ package graft.omop
 import java.nio.file.{Files, Paths}
 import java.sql.Timestamp
 
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 import graft.SparkSpecBase
@@ -220,5 +221,92 @@ class NestedCohortBuilderSpec extends SparkSpecBase {
     val aligned = cohort.select(size(col("concept_ids")) === size(col("frequencies")))
       .as[Boolean].collect()
     assert(aligned.forall(identity))
+  }
+
+  /** A four-patient CDM stored the way the sample CDM is (string-typed
+    * clinical columns, the CDM 5.2 `discharge_to_concept_id`, int32
+    * vocabulary): persons 1–4 each have two outpatient visits in 2015;
+    * person 2 also has a two-day inpatient stay; every visit carries one
+    * condition. */
+  private def writeTinyCdm(dir: String): Unit = {
+    import spark.implicits._
+    def write(name: String, df: DataFrame): Unit =
+      df.write.parquet(s"$dir/$name")
+    val persons = Seq("1", "2", "3", "4")
+    write("person", persons.map(p => (p, "8507", "1970", "1", "1", "1970-01-01 00:00:00", "8527"))
+      .toDF("person_id", "gender_concept_id", "year_of_birth", "month_of_birth", "day_of_birth",
+        "birth_datetime", "race_concept_id"))
+    // (visit id, person, visit concept, start day, end day, discharged to)
+    val visits = persons.flatMap(p => Seq(
+        (s"${p}1", p, "9202", "2015-01-10", "2015-01-10", null: String),
+        (s"${p}2", p, "9202", "2015-04-20", "2015-04-20", null: String))) :+
+      (("23", "2", "9201", "2015-03-01", "2015-03-02", "8536"))
+    write("visit_occurrence", visits.map { case (v, p, c, start, end, disch) =>
+        (v, p, c, start, s"$start 08:00:00", end, s"$end 16:00:00", "44818517", disch) }
+      .toDF("visit_occurrence_id", "person_id", "visit_concept_id", "visit_start_date",
+        "visit_start_datetime", "visit_end_date", "visit_end_datetime", "visit_type_concept_id",
+        "discharge_to_concept_id"))
+    write("observation_period", persons.map(p => (p, p, "2010-01-01", "2020-12-31", "44814724"))
+      .toDF("observation_period_id", "person_id", "observation_period_start_date",
+        "observation_period_end_date", "period_type_concept_id"))
+    write("condition_occurrence", visits.zipWithIndex.map { case ((v, p, _, start, _, _), i) =>
+        (s"$i", p, s"${320128 + i % 3}", start, s"$start 09:00:00", v, "32020") }
+      .toDF("condition_occurrence_id", "person_id", "condition_concept_id",
+        "condition_start_date", "condition_start_datetime", "visit_occurrence_id",
+        "condition_type_concept_id"))
+    write("concept", Seq((320128, "Condition", "SNOMED", "S"), (320129, "Condition", "SNOMED", "S"),
+        (320130, "Condition", "SNOMED", "S"))
+      .toDF("concept_id", "domain_id", "vocabulary_id", "standard_concept"))
+    write("concept_ancestor", Seq((320128, 320128, 0, 0))
+      .toDF("ancestor_concept_id", "descendant_concept_id", "min_levels_of_separation",
+        "max_levels_of_separation"))
+    write("concept_relationship", Seq((320128, 320128, "Maps to"))
+      .toDF("concept_id_1", "concept_id_2", "relationship_id"))
+    write("patient_splits", Seq(("1", "train"), ("2", "train"), ("3", "train"), ("4", "test"))
+      .toDF("person_id", "split"))
+  }
+
+  test("build: sequence features land the same with and without cacheEvents") {
+    import spark.implicits._
+    val input = Files.createTempDirectory("graft-nested-cdm").toString
+    writeTinyCdm(input)
+    val target = Seq(1L, 2L, 3L, 4L)
+      .map(p => (p, ts("2015-06-01 00:00:00"), p * 10 + 2))
+      .toDF("person_id", "index_date", "visit_occurrence_id")
+    val outcome = Seq((2L, ts("2015-09-01 00:00:00"))).toDF("person_id", "index_date")
+
+    def run(cacheEvents: Boolean): (String, Seq[String], Seq[String]) = {
+      val out = Files.createTempDirectory("graft-nested-seq").toString
+      new NestedCohortBuilder(NestedCohortBuilder.Config(
+        cohortName = "Sequence Cohort",
+        inputFolder = input,
+        outputFolder = out,
+        ehrTableList = Seq("condition_occurrence"),
+        observationWindow = 365,
+        holdOffWindow = 0,
+        predictionStartDays = 1,
+        predictionWindow = 360,
+        patientSplitsFolder = Some(s"$input/patient_splits"),
+        isNewPatientRepresentation = true,
+        excludeFeatures = false,
+        cacheEvents = cacheEvents)).build(spark, target, outcome)
+      val base = s"$out/sequence_cohort"
+      def rows(split: String) =
+        spark.read.parquet(s"$base/$split").collect().map(_.toString).sorted.toSeq
+      (base, rows("train"), rows("test"))
+    }
+
+    val (cachedBase, cachedTrain, cachedTest) = run(cacheEvents = true)
+    val (plainBase, plainTrain, plainTest) = run(cacheEvents = false)
+    assert(cachedTrain.size == 3 && cachedTest.size == 1)
+    assert(cachedTrain == plainTrain)
+    assert(cachedTest == plainTest)
+    // the inpatient stay reached the sequence as its discharge token
+    assert(cachedTrain.exists(_.contains("8536")))
+
+    for (barrier <- Seq("cohort_members", "cohort_ehr_records")) {
+      assert(Files.exists(Paths.get(s"$cachedBase/$barrier")), s"$barrier missing with cacheEvents")
+      assert(!Files.exists(Paths.get(s"$plainBase/$barrier")), s"$barrier written without cacheEvents")
+    }
   }
 }
