@@ -1,6 +1,9 @@
 package graft.omop
 
+import java.nio.file.Files
+import java.security.MessageDigest
 import java.sql.{Date, Timestamp}
+import java.time.{LocalDateTime, ZoneOffset}
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
@@ -21,28 +24,43 @@ import graft.omop.decorators._
  *  - patient 2: one inpatient visit (9201) spanning 2 days with events on
  *    both days (inpatient ATT "i-D1" expected between the day groups),
  *    discharged home (8536), then death 5 days after discharge.
+ *  - patient 3 (gender and race 0): an inpatient visit starting 08:00 with
+ *    two events on its first day and one two days later, no discharge
+ *    concept; a second inpatient visit starting at midnight with a null end
+ *    date; a visit with visit_concept_id 0; death three weeks later.
+ *  - patient 4: one outpatient visit; the pinned option sets leave it out
+ *    of the demographic frame, so it keeps only its year token.
  */
 class SequenceSpec extends SparkSpecBase {
 
   import spark.implicits._
 
-  private def ts(s: String) = Timestamp.valueOf(s)
+  // wall-clock strings read as UTC instants, the session time zone, so the
+  // pinned epoch_times do not depend on the JVM's default zone
+  private def ts(s: String) =
+    Timestamp.from(LocalDateTime.parse(s.replace(' ', 'T')).toInstant(ZoneOffset.UTC))
   private def d(s: String) = Date.valueOf(s)
 
   private lazy val visitOccurrence: DataFrame = Seq(
     // (visit_occurrence_id, person_id, visit_concept_id, start_date, start_dt, end_date, end_dt, discharged_to)
     (101L, 1L, 9202, d("2020-01-01"), ts("2020-01-01 09:00:00"), d("2020-01-01"), ts("2020-01-01 10:00:00"), null.asInstanceOf[Integer]),
     (102L, 1L, 9202, d("2020-01-11"), ts("2020-01-11 14:00:00"), d("2020-01-11"), ts("2020-01-11 15:00:00"), null.asInstanceOf[Integer]),
-    (201L, 2L, 9201, d("2020-03-01"), ts("2020-03-01 08:00:00"), d("2020-03-02"), ts("2020-03-02 12:00:00"), Integer.valueOf(8536)))
+    (201L, 2L, 9201, d("2020-03-01"), ts("2020-03-01 08:00:00"), d("2020-03-02"), ts("2020-03-02 12:00:00"), Integer.valueOf(8536)),
+    (301L, 3L, 9201, d("2020-05-01"), ts("2020-05-01 08:00:00"), d("2020-05-03"), ts("2020-05-03 12:00:00"), null.asInstanceOf[Integer]),
+    (302L, 3L, 9201, d("2020-06-01"), ts("2020-06-01 00:00:00"), null.asInstanceOf[Date], null.asInstanceOf[Timestamp], Integer.valueOf(8536)),
+    (303L, 3L, 0, d("2020-07-01"), ts("2020-07-01 11:00:00"), d("2020-07-01"), ts("2020-07-01 12:00:00"), null.asInstanceOf[Integer]),
+    (401L, 4L, 9202, d("2021-02-01"), ts("2021-02-01 09:00:00"), d("2021-02-01"), ts("2021-02-01 09:30:00"), null.asInstanceOf[Integer]))
     .toDF("visit_occurrence_id", "person_id", "visit_concept_id", "visit_start_date",
       "visit_start_datetime", "visit_end_date", "visit_end_datetime", "discharged_to_concept_id")
 
   private lazy val person: DataFrame = Seq(
     (1L, ts("1980-06-15 00:00:00"), 8507, 8527),
-    (2L, ts("1970-01-01 00:00:00"), 8532, 8516))
+    (2L, ts("1970-01-01 00:00:00"), 8532, 8516),
+    (3L, ts("1990-03-10 00:00:00"), 0, 0),
+    (4L, ts("2000-12-31 00:00:00"), 8507, 8527))
     .toDF("person_id", "birth_datetime", "gender_concept_id", "race_concept_id")
 
-  private lazy val death: DataFrame = Seq((2L, d("2020-03-07")))
+  private lazy val death: DataFrame = Seq((2L, d("2020-03-07")), (3L, d("2020-07-22")))
     .toDF("person_id", "death_date")
 
   /** Raw events as extract_ehr_records would emit them (+ visit_concept_id,
@@ -51,7 +69,14 @@ class SequenceSpec extends SparkSpecBase {
     (1L, "C1", d("2020-01-01"), ts("2020-01-01 09:30:00"), 101L, "condition", 9202),
     (1L, "C2", d("2020-01-11"), ts("2020-01-11 14:30:00"), 102L, "condition", 9202),
     (2L, "C3", d("2020-03-01"), ts("2020-03-01 09:00:00"), 201L, "condition", 9201),
-    (2L, "C4", d("2020-03-02"), ts("2020-03-02 10:00:00"), 201L, "condition", 9201))
+    (2L, "C4", d("2020-03-02"), ts("2020-03-02 10:00:00"), 201L, "condition", 9201),
+    (3L, "C5", d("2020-05-01"), ts("2020-05-01 10:00:00"), 301L, "condition", 9201),
+    (3L, "C6", d("2020-05-01"), ts("2020-05-01 15:30:00"), 301L, "condition", 9201),
+    (3L, "C7", d("2020-05-03"), ts("2020-05-03 09:00:00"), 301L, "condition", 9201),
+    (3L, "C8", d("2020-06-01"), ts("2020-06-01 02:00:00"), 302L, "condition", 9201),
+    (3L, "C9", d("2020-06-04"), ts("2020-06-04 06:00:00"), 302L, "condition", 9201),
+    (3L, "C10", d("2020-07-01"), ts("2020-07-01 11:30:00"), 303L, "condition", 0),
+    (4L, "C11", d("2021-02-01"), ts("2021-02-01 09:00:00"), 401L, "condition", 9202))
     .toDF("person_id", "standard_concept_id", "date", "datetime",
       "visit_occurrence_id", "domain", "visit_concept_id")
     .withColumn("event_group_id", lit(null).cast("string"))
@@ -119,6 +144,96 @@ class SequenceSpec extends SparkSpecBase {
     assert(ids.take(4) == Seq("year:2020", "age:40", "8507", "8527"))
     // day tokens: 10-day gap → D10
     assert(ids.contains("D10"))
+  }
+
+  /** One pinned option set: `run` builds the sequences given a persistence
+    * folder; each patient's concept_ids and the md5 of the sorted full rows
+    * (every output column, dates, orders, priorities and epoch_times
+    * included) must match with the folder off and on. */
+  private def pin(label: String, concepts: Map[Long, Seq[String]], rowsMd5: String)(
+      run: Option[String] => DataFrame): Unit = {
+    for (folder <- Seq(None, Some(Files.createTempDirectory("graft-seq").toString))) {
+      val rows = run(folder).collect()
+      val ids = rows.map(r =>
+        r.getAs[Long]("person_id") -> r.getSeq[String](r.fieldIndex("concept_ids")).toSeq).toMap
+      assert(ids == concepts, s"$label, persistenceFolder=$folder")
+      val md5 = MessageDigest.getInstance("MD5")
+        .digest(rows.map(_.toString).sorted.mkString("\n").getBytes("UTF-8"))
+        .map("%02x".format(_)).mkString
+      assert(md5 == rowsMd5, s"$label, persistenceFolder=$folder")
+    }
+  }
+
+  private lazy val demographicsWithoutPatient4 = person.where($"person_id" =!= 4)
+
+  test("pinned rows: CehrBert/Mix with visit types, death, demographics and hour tokens") {
+    pin("cehrbert-mix-full", Map(
+      1L -> Seq("year:2020", "age:40", "8507", "8527", "[VS]", "9202", "C1", "[VE]", "W1", "[VS]", "9202", "C2", "[VE]"),
+      2L -> Seq("year:2020", "age:51", "8532", "8516", "[VS]", "9201", "i-H8", "C3", "i-D1", "i-H10", "C4", "i-H13", "8536", "[VE]", "W0", "[VS]", "[DEATH]", "[VE]"),
+      3L -> Seq("year:2020", "age:31", "Gender/0", "Race/0", "[VS]", "9201", "i-H8", "C5", "C6", "i-D2", "i-H9", "C7", "i-H14", "Discharge/0", "[VE]", "M0", "[VS]", "9201", "C8", "C9", "8536", "[VE]", "M1", "[VS]", "Visit/0", "C10", "[VE]", "W3", "[VS]", "[DEATH]", "[VE]"),
+      4L -> Seq("year:2021", "[VS]", "9202", "C11", "[VE]")),
+      "e8f6c37979147de8b80142516bab9cc5") { folder =>
+      Sequences.createSequenceDataWithAtt(patientEvents, visitWithAge,
+        includeVisitType = true,
+        patientDemographic = Some(demographicsWithoutPatient4),
+        death = Some(death),
+        attType = AttType.CehrBert,
+        inpatientAttType = AttType.Mix,
+        excludeDemographic = false,
+        includeInpatientHourToken = true,
+        persistenceFolder = folder)
+    }
+  }
+
+  test("pinned rows: Day/Day with excludeVisitTokens") {
+    pin("day-day-no-visit-tokens", Map(
+      1L -> Seq("C1", "D10", "C2"),
+      2L -> Seq("C3", "i-D1", "C4", "8536"),
+      3L -> Seq("C5", "C6", "i-D2", "C7", "Discharge/0", "D29", "C8", "C9", "8536", "D30", "C10"),
+      4L -> Seq("C11")),
+      "014c7d7737ef27dccb76e1eeb2837634") { folder =>
+      Sequences.createSequenceDataWithAtt(patientEvents, visitWithAge,
+        excludeVisitTokens = true,
+        death = Some(death),
+        attType = AttType.Day,
+        inpatientAttType = AttType.Day,
+        persistenceFolder = folder)
+    }
+  }
+
+  test("pinned rows: Mix with age groups and hour tokens") {
+    pin("mix-age-group-hours", Map(
+      1L -> Seq("year:2020", "age:30-40", "8507", "8527", "[VS]", "C1", "[VE]", "W2", "[VS]", "C2", "[VE]"),
+      2L -> Seq("year:2020", "age:50-60", "8532", "8516", "[VS]", "i-H8", "C3", "i-D1", "i-H10", "C4", "i-H13", "8536", "[VE]", "D5", "[VS]", "[DEATH]", "[VE]"),
+      3L -> Seq("year:2020", "age:30-40", "Gender/0", "Race/0", "[VS]", "i-H8", "C5", "C6", "i-D2", "i-H9", "C7", "i-H14", "Discharge/0", "[VE]", "W5", "[VS]", "C8", "C9", "8536", "[VE]", "W5", "[VS]", "C10", "[VE]", "W3", "[VS]", "[DEATH]", "[VE]"),
+      4L -> Seq("year:2021", "[VS]", "C11", "[VE]")),
+      "1ba32907e834398551f587ec70adefe7") { folder =>
+      Sequences.createSequenceDataWithAtt(patientEvents, visitWithAge,
+        patientDemographic = Some(demographicsWithoutPatient4),
+        death = Some(death),
+        attType = AttType.Mix,
+        inpatientAttType = AttType.Mix,
+        excludeDemographic = false,
+        useAgeGroup = true,
+        includeInpatientHourToken = true,
+        persistenceFolder = folder)
+    }
+  }
+
+  test("pinned rows: the default set (visit types, death, CehrBert/Mix)") {
+    pin("default", Map(
+      1L -> Seq("[VS]", "9202", "C1", "[VE]", "W1", "[VS]", "9202", "C2", "[VE]"),
+      2L -> Seq("[VS]", "9201", "C3", "i-D1", "C4", "8536", "[VE]", "W0", "[VS]", "[DEATH]", "[VE]"),
+      3L -> Seq("[VS]", "9201", "C5", "C6", "i-D2", "C7", "Discharge/0", "[VE]", "M0", "[VS]", "9201", "C8", "C9", "8536", "[VE]", "M1", "[VS]", "Visit/0", "C10", "[VE]", "W3", "[VS]", "[DEATH]", "[VE]"),
+      4L -> Seq("[VS]", "9202", "C11", "[VE]")),
+      "e5cd4f7570c1e6810ae41089c80670fb") { folder =>
+      Sequences.createSequenceDataWithAtt(patientEvents, visitWithAge,
+        includeVisitType = true,
+        death = Some(death),
+        attType = AttType.CehrBert,
+        inpatientAttType = AttType.Mix,
+        persistenceFolder = folder)
+    }
   }
 
   test("createSequenceData (classic) orders by week bins") {
