@@ -36,10 +36,10 @@ def parse_seeds(text):
     return seeds
 
 
-def run(checkout, workload, seed, seconds):
+def run(checkout, workload, seed, seconds, trace=0):
     """One benchmark run; returns (provenance, result), either None on failure."""
     cmd = [sys.executable, "perfbench/run.py", "--workload", workload, "--seed", str(seed),
-           "--seconds", str(seconds), "--trace", "0"]
+           "--seconds", str(seconds), "--trace", str(trace)]
     proc = subprocess.run(cmd, cwd=checkout, stdout=subprocess.PIPE, stderr=subprocess.PIPE,
                           text=True)
     lines = [json.loads(l) for l in proc.stdout.splitlines() if l.startswith("{")]

@@ -118,13 +118,17 @@ object Tables {
     * per-cheap-query floor). The memo caches only METADATA (the inferred
     * StructType — what a catalog/metastore holds for every production
     * table; at 100 TB nobody schema-infers per query), keyed on the
-    * canonical path PLUS the file status (length, mtime), so a path
-    * rewritten with different contents re-infers. Data is re-read from
-    * parquet on every action as before — this caches no rows, no plans,
-    * no results. Bounded: cleared past 256 entries (rewrites under the
-    * same path retire old keys). */
+    * canonical path PLUS a fingerprint of its data: (length, mtime) for a
+    * single file; for a directory, one listing of its top-level data
+    * files (count, total length, latest mtime), since the directory's own
+    * status does not change when a part file is rewritten in place. Not
+    * detected: a rewrite that keeps the count, total length and latest
+    * mtime, and rewrites below a partition subdirectory. Data is
+    * re-read from parquet on every action as before — this caches no rows,
+    * no plans, no results. Bounded: cleared past 256 entries (rewrites
+    * under the same path retire old keys). */
   private val schemaMemo =
-    new java.util.concurrent.ConcurrentHashMap[(String, Long, Long), StructType]()
+    new java.util.concurrent.ConcurrentHashMap[(String, Int, Long, Long), StructType]()
 
   private def readParquet(spark: SparkSession, p: String): DataFrame = {
     val hp = new org.apache.hadoop.fs.Path(p)
@@ -134,7 +138,15 @@ object Tables {
       catch { case _: java.io.FileNotFoundException => None }
     st match {
       case Some(s) =>
-        val key = (p, s.getLen, s.getModificationTime)
+        // data files as Spark lists them: hidden (`.`) and metadata (`_`) names skipped
+        val files =
+          if (s.isDirectory) fs.listStatus(hp).toSeq.filter { f =>
+            val n = f.getPath.getName
+            !n.startsWith(".") && !n.startsWith("_")
+          }
+          else Seq(s)
+        val key = (p, files.size, files.map(_.getLen).sum,
+          files.map(_.getModificationTime).foldLeft(0L)(math.max))
         val cached = schemaMemo.get(key)
         if (cached != null) spark.read.schema(cached).parquet(p)
         else {

@@ -62,7 +62,6 @@ object OmopSchema {
   val DischargeTokenPriority = 100.0
   val DeathTokenPriority = 199.0
   val VeTokenPriority = 200.0
-  val PredictionTokenPriority = 1000.0
 
   /** Inpatient visit concept ids as used by the decorators
     * (clinical_event_decorator.py:66). Other sites use narrower sets — those

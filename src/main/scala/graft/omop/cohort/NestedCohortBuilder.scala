@@ -78,10 +78,13 @@ final class NestedCohortBuilder(cfg: NestedCohortBuilder.Config) {
 
     // dense_rank over the member triple in the reference — same id values
     // (one per distinct triple, in sort order) from the parallel dense-key
-    // allocator, without the single-partition global window
+    // allocator, without the single-partition global window. The member
+    // keys are broadcast so the labeled rows keep one order from run to
+    // run: the safeguard below keeps the first of rows that tie on label.
     var cohort = graft.operators.IdAllocator.denseKeyId(
         spark.sql(labelingSql),
-        Seq("person_id", "index_date", "visit_occurrence_id"), "cohort_member_id")
+        Seq("person_id", "index_date", "visit_occurrence_id"), "cohort_member_id",
+        broadcastKeys = true)
       .withColumn("cohort_member_id", col("cohort_member_id").cast("int"))
 
     // safeguard: one record per (person, member, index_date), positives first

@@ -18,8 +18,6 @@ import graft.omop.OmopSchema._
  *  - visit rank = row_number over (person, member) by
  *    (visit_start_datetime, is_inpatient, expired, visit_occurrence_id);
  *  - outpatient visit_start_datetime is clamped to start-of-day;
- *  - inpatient visit_end_date falls back to max(event date) in the visit;
- *  - visit_end_datetime = end_date + 1 day − 1 minute (then dropped);
  *  - events `.distinct()` after the join (duplicate collapse is load-bearing).
  *
  * Scale: both windows partition by (person, member) or (member, visit) — high
@@ -52,7 +50,6 @@ final class ClinicalEventDecorator(
         col("person_id"),
         col("cohort_member_id"),
         col("visit_occurrence_id"),
-        col("visit_end_date"),
         col("visit_start_date").cast(DateType).as("visit_start_date"),
         F.to_timestamp(col("visit_start_datetime")).as("visit_start_datetime"),
         col("visit_concept_id").cast("int").isin(InpatientConceptIdsDecorator: _*)
@@ -72,11 +69,6 @@ final class ClinicalEventDecorator(
       Window.partitionBy("person_id", "cohort_member_id")
         .orderBy("visit_rank_order", "concept_order"))
 
-    val visitEndDate = when(col("is_inpatient") === 1,
-        F.coalesce(col("visit_end_date"),
-          F.max("date").over(Window.partitionBy("cohort_member_id", "visit_occurrence_id"))))
-      .otherwise(col("visit_start_date"))
-
     // outpatient records sometimes stamp visit_start_datetime at end of day —
     // clamp to start-of-day for outpatient
     val visitStartDatetime = when(col("is_inpatient") === 0, col("visit_start_date"))
@@ -86,12 +78,9 @@ final class ClinicalEventDecorator(
       .join(visits, Seq("cohort_member_id", "visit_occurrence_id"))
       .withColumn("datetime", F.coalesce(F.to_timestamp(col("datetime")), F.to_timestamp(col("date"))))
       .withColumn("visit_start_datetime", visitStartDatetime)
-      .withColumn("visit_end_date", visitEndDate)
-      .withColumn("visit_end_datetime", F.date_add(col("visit_end_date"), 1).cast(TimestampType))
-      .withColumn("visit_end_datetime", F.expr("visit_end_datetime - INTERVAL 1 MINUTE"))
       .withColumn("concept_order", conceptOrder)
       .withColumn("visit_concept_order", visitConceptOrder)
-      .drop("is_inpatient", "visit_end_date", "visit_end_datetime")
+      .drop("is_inpatient")
       .distinct()
 
     val withPriority = decorated

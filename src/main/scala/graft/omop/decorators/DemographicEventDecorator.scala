@@ -1,6 +1,6 @@
 package graft.omop.decorators
 
-import org.apache.spark.sql.{DataFrame, functions => F}
+import org.apache.spark.sql.{Column, DataFrame, functions => F}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions.{col, concat, lit, when}
 import org.apache.spark.sql.types.StringType
@@ -10,6 +10,11 @@ import graft.omop.OmopSchema._
 /**
  * Prepends prompt tokens — year:YYYY, age:N (or age:L-U bucket), gender
  * concept, race concept — anchored at each patient's first history token.
+ *
+ * Two barriers: the year tokens (one per patient's first token), then one
+ * join of the demographic rows to them whose single `explode` emits the
+ * age, gender and race tokens. A patient without a demographic row keeps
+ * its year token only.
  *
  * Reference: /root/reference/src/cehrbert_data/decorators/
  * demographic_event_decorator.py:33-157 (priorities −10…−7 put these before
@@ -31,16 +36,10 @@ final class DemographicEventDecorator(
       Window.partitionBy("cohort_member_id", "person_id")
         .orderBy("visit_start_datetime", "visit_occurrence_id", "priority", "standard_concept_id"))
 
-    val patientFirstToken = patientEvents
+    val patientFirstToken = withoutValue(patientEvents
       .withColumn("token_order", firstToken)
-      .withColumn("concept_value_mask", lit(0))
-      .withColumn("number_as_value", lit(0.0).cast("float"))
-      .withColumn("concept_as_value", lit("0").cast("string"))
-      .withColumn("is_numeric_type", lit(0))
-      .withColumn("unit", lit(NA))
-      .withColumn("event_group_id", lit(NA))
       .where(col("token_order") === 1)
-      .drop("token_order")
+      .drop("token_order"))
 
     val startYearToken = tryPersist(patientFirstToken
       .withColumn("standard_concept_id",
@@ -65,42 +64,29 @@ final class DemographicEventDecorator(
           F.ceil(F.months_between(col("date"), col("birth_datetime")) / lit(12)).cast(StringType))
       }
 
-    val sequenceAgeToken = tryPersist(
-      demo.select(col("person_id"), col("birth_datetime"))
-        .join(startYearToken, "person_id")
-        .withColumn("standard_concept_id", ageToken)
-        .withColumn("priority", lit(AgeTokenPriority))
-        .drop("birth_datetime"),
-      "sequence_age_tokens")
-
     val genderToken = when(
         F.coalesce(col("gender_concept_id"), lit(0)) =!= 0,
         col("gender_concept_id").cast(StringType))
       .otherwise(lit(GenderUnknownToken))
-    val sequenceGenderToken = tryPersist(
-      demo.select(col("person_id"), col("gender_concept_id"))
-        .join(startYearToken, "person_id")
-        .withColumn("standard_concept_id", genderToken)
-        .withColumn("priority", lit(GenderTokenPriority))
-        .drop("gender_concept_id"),
-      "sequence_gender_tokens")
-
     val raceToken = when(
         F.coalesce(col("race_concept_id"), lit(0)) =!= 0,
         col("race_concept_id").cast(StringType))
       .otherwise(lit(RaceUnknownToken))
-    val sequenceRaceToken = tryPersist(
-      demo.select(col("person_id"), col("race_concept_id"))
-        .join(startYearToken, "person_id")
-        .withColumn("standard_concept_id", raceToken)
-        .withColumn("priority", lit(RaceTokenPriority))
-        .drop("race_concept_id"),
-      "sequence_race_tokens")
+    def token(concept: Column, priority: Double): Column =
+      F.struct(concept.as("standard_concept_id"), lit(priority).as("priority"))
 
-    patientEvents
-      .unionByName(startYearToken)
-      .unionByName(sequenceAgeToken)
-      .unionByName(sequenceGenderToken)
-      .unionByName(sequenceRaceToken)
+    val demographicTokens = tryPersist(
+      demo.select("person_id", "birth_datetime", "gender_concept_id", "race_concept_id")
+        .join(startYearToken, "person_id")
+        .select(col("*"), F.explode(F.array(
+          token(ageToken, AgeTokenPriority),
+          token(genderToken, GenderTokenPriority),
+          token(raceToken, RaceTokenPriority))).as("token"))
+        .withColumn("standard_concept_id", col("token.standard_concept_id"))
+        .withColumn("priority", col("token.priority"))
+        .drop("token", "birth_datetime", "gender_concept_id", "race_concept_id"),
+      "sequence_demographic_tokens")
+
+    patientEvents.unionByName(startYearToken).unionByName(demographicTokens)
   }
 }

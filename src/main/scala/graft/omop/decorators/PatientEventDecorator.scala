@@ -1,6 +1,9 @@
 package graft.omop.decorators
 
+import scala.collection.immutable.ListMap
+
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.functions.lit
 
 import graft.core.Checkpoints
 import graft.omop.OmopSchema
@@ -33,4 +36,17 @@ trait PatientEventDecorator {
 
   protected def tryPersist(df: DataFrame, sub: String): DataFrame =
     Checkpoints.lineageBarrier(df, persistenceFolder, s"$name/$sub")
+
+  /** Sets the six value columns of a synthetic token, which carries no
+    * value: concept_value_mask 0, number_as_value 0.0f, concept_as_value
+    * "0", is_numeric_type 0, and unit and event_group_id N/A. The ATT and
+    * demographic decorators give their tokens these values only here. */
+  protected def withoutValue(df: DataFrame): DataFrame =
+    df.withColumns(ListMap(
+      "concept_value_mask" -> lit(0),
+      "number_as_value" -> lit(0.0f),
+      "concept_as_value" -> lit("0"),
+      "is_numeric_type" -> lit(0),
+      "unit" -> lit(OmopSchema.NA),
+      "event_group_id" -> lit(OmopSchema.NA)))
 }

@@ -70,9 +70,16 @@ object IdAllocator {
    * (much smaller) key set, then a null-safe equi-join back on the keys. Two
    * shuffles on high-cardinality keys instead of one single-partition sort of
    * the full dataset.
+   *
+   * Rows of `df` that share a key tuple come out of the join in no fixed
+   * order: adaptive execution turns the join into a broadcast join and
+   * builds it on whichever input finishes first, so the order can change
+   * from run to run. `broadcastKeys` fixes the plan for callers whose later
+   * steps depend on that order: the key table (one row per key tuple) is
+   * always the broadcast side, and `df` streams through in its own order.
    */
   def denseKeyId(df: DataFrame, keys: Seq[String], idCol: String,
-                 startAt: Long = 1L): DataFrame = {
+                 startAt: Long = 1L, broadcastKeys: Boolean = false): DataFrame = {
     // withColumn-replacement semantics, as in sequentialId above — including
     // a key list that CONTAINS idCol (dense re-basing keyed by the old id):
     // the old column is renamed aside for the keying, then dropped.
@@ -97,7 +104,8 @@ object IdAllocator {
         !base.columns.contains(p + k) && p + k != idCol)).get
     val renamed = keyNames.foldLeft(keyed)((d, k) => d.withColumnRenamed(k, kPrefix + k))
     val cond = keyNames.map(k => col(k) <=> col(kPrefix + k)).reduce(_ && _)
-    val joined = base.join(renamed, cond, "inner").drop(keyNames.map(kPrefix + _): _*)
+    val joined = base.join(if (broadcastKeys) broadcast(renamed) else renamed, cond, "inner")
+      .drop(keyNames.map(kPrefix + _): _*)
     if (clash) joined.drop(tmp) else joined
   }
 

@@ -1,9 +1,11 @@
 package graft.omop
 
-import java.nio.file.Files
+import java.nio.file.{Files, Paths}
 import java.security.MessageDigest
 import java.sql.{Date, Timestamp}
 import java.time.{LocalDateTime, ZoneOffset}
+
+import scala.jdk.CollectionConverters._
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
@@ -234,6 +236,25 @@ class SequenceSpec extends SparkSpecBase {
         inpatientAttType = AttType.Mix,
         persistenceFolder = folder)
     }
+  }
+
+  test("persistence layout: one demographic token barrier, first-hour tokens with the visit tokens") {
+    val folder = Files.createTempDirectory("graft-seq-layout").toString
+    Sequences.createSequenceDataWithAtt(patientEvents, visitWithAge,
+      patientDemographic = Some(demographicsWithoutPatient4),
+      excludeDemographic = false,
+      includeInpatientHourToken = true,
+      persistenceFolder = Some(folder)).count()
+
+    val demographicBarriers = Files.list(Paths.get(folder, "demographic_events"))
+      .iterator().asScala.map(_.getFileName.toString).toSet
+    assert(demographicBarriers == Set("sequence_start_year_tokens", "sequence_demographic_tokens"))
+
+    val firstHour = $"priority" === OmopSchema.FirstVisitHourTokenPriority
+    val visitTokens = spark.read.parquet(s"$folder/att_events/artificial_tokens")
+    assert(visitTokens.where(firstHour).select("person_id", "standard_concept_id")
+      .as[(Long, String)].collect().sorted.toSeq == Seq(2L -> "i-H8", 3L -> "i-H8"))
+    assert(spark.read.parquet(s"$folder/att_events/inpatient_att_events").where(firstHour).isEmpty)
   }
 
   test("createSequenceData (classic) orders by week bins") {

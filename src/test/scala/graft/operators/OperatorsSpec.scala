@@ -143,6 +143,18 @@ class OperatorsSpec extends SparkSpecBase {
     assert(out == Set((1, 1L, "k1"), (2, 2L, "k2"), (3, 1L, "k3")))
   }
 
+  test("IdAllocator.denseKeyId with broadcastKeys keeps the input's row order") {
+    // rows sharing a key must come out in input order: the key table is the
+    // broadcast side and the input streams through, whatever adaptive
+    // execution would pick from the two sides' sizes
+    val df = Seq(("b", 1), ("a", 2), ("b", 3), ("a", 4), ("b", 5)).toDF("k", "v").coalesce(1)
+    val out = IdAllocator.denseKeyId(df, Seq("k"), "id", broadcastKeys = true)
+    val rows = out.collect().map(r => (r.getAs[Int]("v"), r.getAs[Long]("id")))
+    assert(rows.toSeq == Seq((1, 2L), (2, 1L), (3, 2L), (4, 1L), (5, 2L)))
+    val plan = out.queryExecution.executedPlan.toString
+    assert(plan.contains("BuildRight") && !plan.contains("BuildLeft"), plan)
+  }
+
   test("IdAllocator.denseKeyId scratch prefix steps past an idCol collision") {
     // minting an id literally named __k_<key> must not be shadowed by the
     // rename of the key column on the keyed side
