@@ -5,7 +5,7 @@ import org.apache.spark.sql.execution.FormattedMode
 import org.apache.spark.sql.functions._
 
 import graft.SparkSpecBase
-import graft.omop.Preprocess
+import graft.omop.{Preprocess, TinyCdm}
 
 /** The opt-in bucketed base-table layout: with the gate off nothing
   * changes; with it on, materialized tables resolve to bucketed catalog
@@ -14,7 +14,7 @@ import graft.omop.Preprocess
 class BucketedLayoutSpec extends SparkSpecBase {
 
   private val sfDir = "/root/testdata/sf0.001"
-  private val omopDir = "/root/reference/sample_data/omop_sample"
+  private lazy val omopDir = TinyCdm.create(spark, "graft-bucketed-cdm")
 
   private def formatted(df: DataFrame): String =
     df.queryExecution.explainString(FormattedMode)

@@ -3,23 +3,23 @@ package graft.omop
 import java.nio.file.{Files, Paths}
 import java.sql.Timestamp
 
-import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 import graft.SparkSpecBase
 import graft.omop.cohort.{NestedCohortBuilder, QueryBuilder}
 
 /**
- * End-to-end assembly of NestedCohortBuilder.build over the bundled sample
- * CDM: exclusion rewrites → bounded labeling → cohort_member_id allocation →
- * positives-first safeguard → EHR-record filter → study_end_date /
- * time_to_event → split-aware sink. The SQL shapes themselves are
- * DuckDB-oracled by the driver (j11/j12); this spec pins the surrounding
- * orchestration the oracle can't see (spark_app_base.py:276-607).
+ * End-to-end assembly of NestedCohortBuilder.build over the in-repo CDM
+ * fixture ([[TinyCdm]]): exclusion rewrites → bounded labeling →
+ * cohort_member_id allocation → positives-first safeguard → EHR-record
+ * filter → study_end_date / time_to_event → split-aware sink. The SQL
+ * shapes themselves are DuckDB-oracled by the driver (j11/j12); this spec
+ * pins the surrounding orchestration the oracle can't see
+ * (spark_app_base.py:276-607).
  */
 class NestedCohortBuilderSpec extends SparkSpecBase {
 
-  private val omopInput = "/root/reference/sample_data/omop_sample"
+  private lazy val omopInput = TinyCdm.create(spark, "graft-nested-cdm")
 
   private def ts(s: String) = Timestamp.valueOf(s)
 
@@ -34,7 +34,6 @@ class NestedCohortBuilderSpec extends SparkSpecBase {
   }
 
   test("build: exclusions, labels, member ids, time_to_event and splits end-to-end") {
-    assume(Files.exists(Paths.get(omopInput)), s"$omopInput not present")
     import spark.implicits._
     val out = Files.createTempDirectory("graft-nested").toString
 
@@ -116,7 +115,6 @@ class NestedCohortBuilderSpec extends SparkSpecBase {
   }
 
   test("build: unbounded window + MEDS rename + single contribution") {
-    assume(Files.exists(Paths.get(omopInput)), s"$omopInput not present")
     import spark.implicits._
     val out = Files.createTempDirectory("graft-nested-meds").toString
 
@@ -169,7 +167,7 @@ class NestedCohortBuilderSpec extends SparkSpecBase {
     // p1: study_end = outcome date → 59 days from index
     assert(rows(1L)._3 == 59)
     // p2 negative: unbounded window → study_end = observation_period_end_date
-    // (2019-11-24 for person 2 in the sample CDM)
+    // (2019-11-24 for person 2 in the fixture CDM)
     assert(!rows(2L)._2)
     assert(rows(2L)._3 ==
       java.time.temporal.ChronoUnit.DAYS.between(
@@ -178,7 +176,6 @@ class NestedCohortBuilderSpec extends SparkSpecBase {
   }
 
   test("build: concept-frequency feature branch joins features and applies thresholds") {
-    assume(Files.exists(Paths.get(omopInput)), s"$omopInput not present")
     import spark.implicits._
     val out = Files.createTempDirectory("graft-nested-feat").toString
 
@@ -223,53 +220,8 @@ class NestedCohortBuilderSpec extends SparkSpecBase {
     assert(aligned.forall(identity))
   }
 
-  /** A four-patient CDM stored the way the sample CDM is (string-typed
-    * clinical columns, the CDM 5.2 `discharge_to_concept_id`, int32
-    * vocabulary): persons 1–4 each have two outpatient visits in 2015;
-    * person 2 also has a two-day inpatient stay; every visit carries one
-    * condition. */
-  private def writeTinyCdm(dir: String): Unit = {
-    import spark.implicits._
-    def write(name: String, df: DataFrame): Unit =
-      df.write.parquet(s"$dir/$name")
-    val persons = Seq("1", "2", "3", "4")
-    write("person", persons.map(p => (p, "8507", "1970", "1", "1", "1970-01-01 00:00:00", "8527"))
-      .toDF("person_id", "gender_concept_id", "year_of_birth", "month_of_birth", "day_of_birth",
-        "birth_datetime", "race_concept_id"))
-    // (visit id, person, visit concept, start day, end day, discharged to)
-    val visits = persons.flatMap(p => Seq(
-        (s"${p}1", p, "9202", "2015-01-10", "2015-01-10", null: String),
-        (s"${p}2", p, "9202", "2015-04-20", "2015-04-20", null: String))) :+
-      (("23", "2", "9201", "2015-03-01", "2015-03-02", "8536"))
-    write("visit_occurrence", visits.map { case (v, p, c, start, end, disch) =>
-        (v, p, c, start, s"$start 08:00:00", end, s"$end 16:00:00", "44818517", disch) }
-      .toDF("visit_occurrence_id", "person_id", "visit_concept_id", "visit_start_date",
-        "visit_start_datetime", "visit_end_date", "visit_end_datetime", "visit_type_concept_id",
-        "discharge_to_concept_id"))
-    write("observation_period", persons.map(p => (p, p, "2010-01-01", "2020-12-31", "44814724"))
-      .toDF("observation_period_id", "person_id", "observation_period_start_date",
-        "observation_period_end_date", "period_type_concept_id"))
-    write("condition_occurrence", visits.zipWithIndex.map { case ((v, p, _, start, _, _), i) =>
-        (s"$i", p, s"${320128 + i % 3}", start, s"$start 09:00:00", v, "32020") }
-      .toDF("condition_occurrence_id", "person_id", "condition_concept_id",
-        "condition_start_date", "condition_start_datetime", "visit_occurrence_id",
-        "condition_type_concept_id"))
-    write("concept", Seq((320128, "Condition", "SNOMED", "S"), (320129, "Condition", "SNOMED", "S"),
-        (320130, "Condition", "SNOMED", "S"))
-      .toDF("concept_id", "domain_id", "vocabulary_id", "standard_concept"))
-    write("concept_ancestor", Seq((320128, 320128, 0, 0))
-      .toDF("ancestor_concept_id", "descendant_concept_id", "min_levels_of_separation",
-        "max_levels_of_separation"))
-    write("concept_relationship", Seq((320128, 320128, "Maps to"))
-      .toDF("concept_id_1", "concept_id_2", "relationship_id"))
-    write("patient_splits", Seq(("1", "train"), ("2", "train"), ("3", "train"), ("4", "test"))
-      .toDF("person_id", "split"))
-  }
-
   test("build: sequence features land the same with and without cacheEvents") {
     import spark.implicits._
-    val input = Files.createTempDirectory("graft-nested-cdm").toString
-    writeTinyCdm(input)
     val target = Seq(1L, 2L, 3L, 4L)
       .map(p => (p, ts("2015-06-01 00:00:00"), p * 10 + 2))
       .toDF("person_id", "index_date", "visit_occurrence_id")
@@ -279,14 +231,14 @@ class NestedCohortBuilderSpec extends SparkSpecBase {
       val out = Files.createTempDirectory("graft-nested-seq").toString
       new NestedCohortBuilder(NestedCohortBuilder.Config(
         cohortName = "Sequence Cohort",
-        inputFolder = input,
+        inputFolder = omopInput,
         outputFolder = out,
         ehrTableList = Seq("condition_occurrence"),
         observationWindow = 365,
         holdOffWindow = 0,
         predictionStartDays = 1,
         predictionWindow = 360,
-        patientSplitsFolder = Some(s"$input/patient_splits"),
+        patientSplitsFolder = Some(s"$omopInput/patient_splits"),
         isNewPatientRepresentation = true,
         excludeFeatures = false,
         cacheEvents = cacheEvents)).build(spark, target, outcome)

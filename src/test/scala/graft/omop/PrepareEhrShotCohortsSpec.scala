@@ -7,12 +7,12 @@ import graft.omop.tools.{ExtractFeatures, PrepareEhrShotCohorts}
 
 /**
  * End-to-end batch cohort prep: labeled_patients.csv per subdirectory →
- * one ExtractFeatures run each over the bundled sample CDM (read-only),
- * skipping cohorts whose output already exists.
+ * one ExtractFeatures run each over the in-repo CDM fixture ([[TinyCdm]],
+ * read-only), skipping cohorts whose output already exists.
  */
 class PrepareEhrShotCohortsSpec extends SparkSpecBase {
 
-  private val omopInput = "/root/reference/sample_data/omop_sample"
+  private lazy val omopInput = TinyCdm.create(spark, "graft-ehrshot-cdm")
 
   private def writeCohortCsv(dir: String, name: String, persons: Seq[Long]): Unit = {
     val sub = Paths.get(dir, name)
