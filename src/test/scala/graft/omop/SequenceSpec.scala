@@ -88,13 +88,15 @@ class SequenceSpec extends SparkSpecBase {
     .withColumn("age", lit(40))
     .withColumn("cohort_member_id", col("person_id"))
 
-  private lazy val visitWithAge: DataFrame =
-    visitOccurrence.join(
-        person.select("person_id", "birth_datetime", "race_concept_id", "gender_concept_id"),
+  private def withAge(visits: DataFrame, persons: DataFrame): DataFrame =
+    visits.join(
+        persons.select("person_id", "birth_datetime", "race_concept_id", "gender_concept_id"),
         "person_id")
       .withColumn("age",
         ceil(months_between(col("visit_start_date"), col("birth_datetime")) / lit(12)))
       .drop("birth_datetime")
+
+  private lazy val visitWithAge: DataFrame = withAge(visitOccurrence, person)
 
   test("ClinicalEventDecorator attaches ranks, orders, segments per contract") {
     val out = new ClinicalEventDecorator(visitWithAge).decorate(patientEvents)
@@ -149,7 +151,7 @@ class SequenceSpec extends SparkSpecBase {
   }
 
   /** One pinned option set: `run` builds the sequences given a persistence
-    * folder; each patient's concept_ids and the md5 of the sorted full rows
+    * folder; each cohort member's concept_ids and the md5 of the sorted full rows
     * (every output column, dates, orders, priorities and epoch_times
     * included) must match with the folder off and on. */
   private def pin(label: String, concepts: Map[Long, Seq[String]], rowsMd5: String)(
@@ -157,7 +159,7 @@ class SequenceSpec extends SparkSpecBase {
     for (folder <- Seq(None, Some(Files.createTempDirectory("graft-seq").toString))) {
       val rows = run(folder).collect()
       val ids = rows.map(r =>
-        r.getAs[Long]("person_id") -> r.getSeq[String](r.fieldIndex("concept_ids")).toSeq).toMap
+        r.getAs[Long]("cohort_member_id") -> r.getSeq[String](r.fieldIndex("concept_ids")).toSeq).toMap
       assert(ids == concepts, s"$label, persistenceFolder=$folder")
       val md5 = MessageDigest.getInstance("MD5")
         .digest(rows.map(_.toString).sorted.mkString("\n").getBytes("UTF-8"))
@@ -234,6 +236,71 @@ class SequenceSpec extends SparkSpecBase {
         death = Some(death),
         attType = AttType.CehrBert,
         inpatientAttType = AttType.Mix,
+        persistenceFolder = folder)
+    }
+  }
+
+  // The cohort fixture adds person 5, two cohort members of it, to persons
+  // 1–4 (each its own member, indexed after all of its visits). Person 5:
+  // outpatient visit 501 on 2020-08-01, inpatient visit 502 from
+  // 2020-09-01 08:00 to 2020-09-03 discharged home, outpatient visit 503 on
+  // 2020-10-01, death on 2020-10-20. Member 51 is indexed at 2020-09-01
+  // 06:00, so visit 502 starts after its index (its start clamps to the
+  // day before) and event C21 lies after it; member 52 is indexed after
+  // every visit.
+  private lazy val cohortPerson: DataFrame = person.unionByName(
+    Seq((5L, ts("1985-04-01 00:00:00"), 8532, 8516)).toDF(person.columns.toIndexedSeq: _*))
+
+  private lazy val cohortVisits: DataFrame = withAge(visitOccurrence.unionByName(Seq(
+      (501L, 5L, 9202, d("2020-08-01"), ts("2020-08-01 09:00:00"), d("2020-08-01"), ts("2020-08-01 10:00:00"), null.asInstanceOf[Integer]),
+      (502L, 5L, 9201, d("2020-09-01"), ts("2020-09-01 08:00:00"), d("2020-09-03"), ts("2020-09-03 12:00:00"), Integer.valueOf(8536)),
+      (503L, 5L, 9202, d("2020-10-01"), ts("2020-10-01 10:00:00"), d("2020-10-01"), ts("2020-10-01 11:00:00"), null.asInstanceOf[Integer]))
+    .toDF(visitOccurrence.columns.toIndexedSeq: _*)), cohortPerson)
+
+  private lazy val cohortEvents: DataFrame = {
+    val person5 = Seq(
+      (51L, "C20", d("2020-08-01"), ts("2020-08-01 09:30:00"), 501L, 9202),
+      (51L, "C21", d("2020-09-01"), ts("2020-09-01 09:00:00"), 502L, 9201),
+      (52L, "C20", d("2020-08-01"), ts("2020-08-01 09:30:00"), 501L, 9202),
+      (52L, "C21", d("2020-09-01"), ts("2020-09-01 09:00:00"), 502L, 9201),
+      (52L, "C22", d("2020-09-02"), ts("2020-09-02 11:00:00"), 502L, 9201),
+      (52L, "C23", d("2020-10-01"), ts("2020-10-01 10:30:00"), 503L, 9202))
+      .toDF("cohort_member_id", "standard_concept_id", "date", "datetime",
+        "visit_occurrence_id", "visit_concept_id")
+      .withColumn("person_id", lit(5L))
+      .withColumn("domain", lit("condition"))
+    patientEvents.unionByName(person5, allowMissingColumns = true)
+      .withColumn("event_group_id", lit(null).cast("string"))
+      .withColumn("unit", lit(OmopSchema.NA))
+      .withColumn("age", lit(40))
+  }
+
+  private lazy val cohortIndex: DataFrame =
+    (Seq(1L, 2L, 3L, 4L).map(p => (p, p, ts("2022-01-01 00:00:00"))) ++ Seq(
+      (5L, 51L, ts("2020-09-01 06:00:00")),
+      (5L, 52L, ts("2020-12-01 00:00:00"))))
+      .toDF("person_id", "cohort_member_id", "index_date")
+
+  test("pinned rows: a cohort index with two members of one person") {
+    pin("cohort-index", Map(
+      1L -> Seq("year:2020", "age:40", "8507", "8527", "[VS]", "9202", "C1", "[VE]", "W1", "[VS]", "9202", "C2", "[VE]"),
+      2L -> Seq("year:2020", "age:51", "8532", "8516", "[VS]", "9201", "i-H8", "C3", "i-D1", "i-H10", "C4", "i-H13", "8536", "[VE]", "W0", "[VS]", "[DEATH]", "[VE]"),
+      3L -> Seq("year:2020", "age:31", "Gender/0", "Race/0", "[VS]", "9201", "i-H8", "C5", "C6", "i-D2", "i-H9", "C7", "i-H14", "Discharge/0", "[VE]", "M0", "[VS]", "9201", "C8", "C9", "8536", "[VE]", "M1", "[VS]", "Visit/0", "C10", "[VE]", "W3", "[VS]", "[DEATH]", "[VE]"),
+      4L -> Seq("year:2021", "age:21", "8507", "8527", "[VS]", "9202", "C11", "[VE]"),
+      // visit 502 clamped to start 2020-08-31 06:00 (first-hour token i-H6);
+      // C21, the [VE] of 502 and the death visit lie after the index
+      51L -> Seq("year:2020", "age:36", "8532", "8516", "[VS]", "9202", "C20", "[VE]", "M1", "[VS]", "9201", "i-H6"),
+      52L -> Seq("year:2020", "age:36", "8532", "8516", "[VS]", "9202", "C20", "[VE]", "M1", "[VS]", "9201", "i-H8", "C21", "i-D1", "i-H11", "C22", "i-D1", "i-H23", "8536", "[VE]", "M0", "[VS]", "9202", "C23", "[VE]", "W2", "[VS]", "[DEATH]", "[VE]")),
+      "5c0a72c8175a295f9423943073b0318c") { folder =>
+      Sequences.createSequenceDataWithAtt(cohortEvents, cohortVisits,
+        includeVisitType = true,
+        patientDemographic = Some(cohortPerson),
+        death = Some(death.unionByName(Seq((5L, d("2020-10-20"))).toDF(death.columns.toIndexedSeq: _*))),
+        attType = AttType.CehrBert,
+        inpatientAttType = AttType.Mix,
+        excludeDemographic = false,
+        includeInpatientHourToken = true,
+        cohortIndex = Some(cohortIndex),
         persistenceFolder = folder)
     }
   }
