@@ -51,15 +51,15 @@ object Sequences {
     }
 
     // For prediction cohorts: clamp visit_start to index_date − 1 day for
-    // visits starting after the index, and keep only visits that appear in
-    // the events (spark_utils.py:469-493).
+    // visits starting after the index (spark_utils.py:469-493). The
+    // reference also keeps only visits that appear in the events; the
+    // decorators read visits through the events, so that filter is implied.
     var visits = visitOccurrence
     cohortIndex.foreach { idx =>
       val joinKeys =
         if (visits.columns.contains("cohort_member_id")) Seq("person_id", "cohort_member_id")
         else Seq("person_id")
       visits = visits
-        .join(patientEvents.select("visit_occurrence_id").distinct(), "visit_occurrence_id")
         .join(idx, joinKeys)
         .withColumn("visit_start_datetime",
           when(col("visit_start_datetime") > col("index_date"),

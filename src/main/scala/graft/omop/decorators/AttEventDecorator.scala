@@ -1,7 +1,7 @@
 package graft.omop.decorators
 
 import org.apache.spark.sql.{Column, DataFrame, functions => F}
-import org.apache.spark.sql.expressions.Window
+import org.apache.spark.sql.expressions.{Window, WindowSpec}
 import org.apache.spark.sql.functions.{col, lit, when}
 import org.apache.spark.sql.types.{DateType, TimestampType}
 
@@ -23,16 +23,22 @@ import graft.omop.OmopSchema._
  * span-boundary dedup (row_number over (member, visit, concept_order) by
  * priority) before inpatient ATT; the fractional priority perturbations.
  *
- * Shape: every token that hangs off one visit row — [VS], the ATT gap from
- * the previous visit's end, [VE], the visit type and the first-hour token —
- * is one struct of an array built per visit, and one `explode` emits them
- * all into the `artificial_tokens` barrier (the ATT and first-hour entries
- * are null where they do not apply, and their rows are dropped). Discharge
- * tokens are visit-anchored too but stay apart: they join the inpatient
- * events before the span-boundary dedup and the inpatient ATT/hour windows,
- * so they shape those tokens. The inpatient ATT and hour tokens are
- * anchored on events (each follows the event before it in its visit), not
- * on visits, so they come from windows over `inpatient_events`.
+ * One pass: the events join the visit table once, on its key, and every
+ * token hangs off one event row, so one `explode` emits each row with its
+ * tokens.
+ *  - A visit counts for a member of the visit's own person: the reference's
+ *    join through the member's (person_id, cohort_member_id) pairs, as every
+ *    member's events are of one person. Its tokens — [VS], the ATT gap from
+ *    the previous visit's end, [VE], the visit type, the first-hour token,
+ *    and for an inpatient visit the discharge token with its own inpatient
+ *    ATT and hour tokens — hang off one anchor row of the visit.
+ *  - Inpatient ATT and hour tokens hang off the first row (by priority) of
+ *    each concept_order group and measure from the group before it.
+ *  - The previous visit and the previous group are range frames of one step
+ *    over visit_rank_order and concept_order: the clinical decorator ranks
+ *    both densely, so the step before rank r is rank r − 1.
+ * Every window partitions by cohort_member_id plus other keys, so one hash
+ * partitioning on cohort_member_id serves them all.
  *
  * The reference computes ATT tokens via Python UDFs; here they are pure
  * Column expressions ([[TimeTokens]]) that stay in whole-stage codegen.
@@ -51,195 +57,169 @@ final class AttEventDecorator(
 
   override protected def decorateImpl(patientEvents: DataFrame): DataFrame = {
     if (attType == AttType.None) return patientEvents
-
-    val cohortMemberPersonPair = patientEvents.select("person_id", "cohort_member_id").distinct()
-    val validVisitIds = patientEvents
-      .groupBy("cohort_member_id", "visit_occurrence_id", "visit_segment", "visit_rank_order")
-      .agg(
-        F.min("visit_concept_order").as("min_visit_concept_order"),
-        F.max("visit_concept_order").as("max_visit_concept_order"),
-        F.min("concept_order").as("min_concept_order"),
-        F.max("concept_order").as("max_concept_order"))
+    // visit tokens carry the visit's person_id; every row keeps its member
+    val columns = patientEvents.columns.toSeq.filterNot(_ == "cohort_member_id")
 
     val joinKeys =
-      if (visitOccurrence.columns.contains("cohort_member_id")) Seq("person_id", "cohort_member_id")
-      else Seq("person_id")
+      if (visitOccurrence.columns.contains("cohort_member_id"))
+        Seq("visit_occurrence_id", "cohort_member_id")
+      else Seq("visit_occurrence_id")
 
+    // the visit's own fields, which its tokens carry
     val isInpatient = col("visit_concept_id").isin(InpatientConceptIdsDecorator: _*)
-    // a visit's last minute: end date + 1 day − 1 minute
-    val endOfVisit = F.expr("CAST(date_add(visit_end_date, 1) AS TIMESTAMP) - INTERVAL 1 MINUTE")
-
-    val visitOcc0 = withoutValue(visitOccurrence
-      .join(cohortMemberPersonPair, joinKeys)
-      .select(
-        col("person_id"),
-        col("cohort_member_id"),
-        col("visit_start_date").cast(DateType).as("date"),
-        col("visit_start_date").cast(DateType).as("visit_start_date"),
-        col("visit_start_datetime").cast(TimestampType).as("visit_start_datetime"),
-        F.coalesce(col("visit_end_date"), col("visit_start_date")).cast(DateType).as("visit_end_date"),
-        col("visit_concept_id"),
-        col("visit_occurrence_id"),
-        lit("visit").as("domain"),
-        lit(0).as("mlm_skip_value"),
-        col("age"),
-        col("discharged_to_concept_id"))
-      .join(validVisitIds, Seq("visit_occurrence_id", "cohort_member_id"))
+    val visits = visitOccurrence.select(joinKeys.map(col) ++ Seq(
+      col("person_id").as("v_person_id"),
+      col("visit_start_date").cast(DateType).as("v_start_date"),
+      col("visit_start_datetime").cast(TimestampType).as("v_start_datetime"),
       // outpatient visits are assumed to end the day they start (bad end dates)
-      .withColumn("visit_end_date",
-        when(isInpatient, col("visit_end_date")).otherwise(col("visit_start_date")))
-      .withColumn("date_in_week",
-        (F.unix_timestamp(col("date")) / lit(24 * 60 * 60 * 7)).cast("int")))
+      when(isInpatient, F.coalesce(col("visit_end_date"), col("visit_start_date")).cast(DateType))
+        .otherwise(col("visit_start_date").cast(DateType)).as("v_end_date"),
+      col("visit_concept_id").as("v_concept_id"),
+      col("age").as("v_age"),
+      col("discharged_to_concept_id").as("v_discharged_to"),
+      F.coalesce(isInpatient, lit(false)).as("v_inpatient")): _*)
 
-    val visitOcc = tryPersist(visitOcc0, "visit_occurrence_temp")
-    val bounds = Seq("min_visit_concept_order", "max_visit_concept_order",
-      "min_concept_order", "max_concept_order")
+    val visit = Window.partitionBy("cohort_member_id", "visit_occurrence_id")
+    val byConceptOrder = visit.orderBy("concept_order")
+    def whole(w: WindowSpec) = w.rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing)
+    val wholeVisit = whole(byConceptOrder)
+    val previousGroup = byConceptOrder.rangeBetween(-1, -1)
+    val previousVisit = Window.partitionBy("cohort_member_id", "v_person_id")
+      .orderBy("visit_rank_order").rangeBetween(-1, -1)
+    val spanBoundary = F.row_number().over(
+      Window.partitionBy("cohort_member_id", "visit_occurrence_id", "concept_order")
+        .orderBy("priority")) === 1
 
-    // ------------------------------------------- visit-anchored tokens
-    def token(concept: Column, date: Column, datetime: Column, visitConceptOrder: Column,
-        conceptOrder: Column, priority: Double): Column =
-      F.struct(concept.as("standard_concept_id"), date.as("date"), datetime.as("datetime"),
-        visitConceptOrder.as("visit_concept_order"), conceptOrder.as("concept_order"),
-        lit(priority).as("priority"))
-    val startOfVisit = F.to_timestamp(col("visit_start_date"))
-    def atVisitStart(concept: Column, priority: Double): Column =
-      token(concept, col("visit_start_date"), startOfVisit, col("min_visit_concept_order"),
-        lit(0), priority)
+    val clampedDate = when(col("date") < col("visit_start_date"), col("visit_start_date"))
+      .otherwise(when(col("date") > col("visit_end"), col("visit_end")).otherwise(col("date")))
 
-    val visitStart = token(lit(VsToken), col("visit_start_date"), startOfVisit,
-      col("min_visit_concept_order"), col("min_concept_order") - 1, VsTokenPriority)
-    val visitEnd = token(lit(VeToken), col("visit_end_date"), endOfVisit,
-      col("max_visit_concept_order"), col("max_concept_order") + 1, VeTokenPriority)
+    // Two sorts serve every window: the previous visit's, and one by
+    // (member, visit, concept_order, priority), which the span boundary and
+    // every visit-level window reuse. Within a span the inpatient priority
+    // shift is one constant, so the boundary is the same before and after it.
+    val stream = patientEvents
+      .join(visits, joinKeys, "left")
+      .repartition(col("cohort_member_id"))
+      .withColumns(Map(
+        "is_kept" -> F.coalesce(col("v_person_id") === col("person_id"), lit(false)),
+        "prev_visit_end_date" -> F.max("v_end_date").over(previousVisit)))
+      .withColumn("is_boundary", spanBoundary)
+      .withColumns(Map(
+        "is_inpatient" -> (col("is_kept") && col("v_inpatient")),
+        "visit_end" -> F.coalesce(col("v_end_date"),
+          F.max("date").over(whole(visit.orderBy("concept_order", "priority"))))))
+      .withColumns(Map(
+        "date" -> when(col("is_inpatient"), clampedDate).otherwise(col("date")),
+        "priority" -> when(col("is_inpatient"), col("priority") + col("concept_order") * 0.1)
+          .otherwise(col("priority"))))
+      .withColumns(Map(
+        "min_visit_concept_order" -> F.min("visit_concept_order").over(wholeVisit),
+        "max_visit_concept_order" -> F.max("visit_concept_order").over(wholeVisit),
+        "min_concept_order" -> F.min("concept_order").over(wholeVisit),
+        "max_concept_order" -> F.max("concept_order").over(wholeVisit),
+        "visit_rows" -> F.count(lit(1)).over(wholeVisit),
+        "last" -> F.max_by(F.struct("date", "datetime"),
+          F.struct(col("concept_order"), -col("priority"))).over(wholeVisit),
+        "is_anchor" -> (col("is_kept") && F.row_number().over(byConceptOrder) === 1),
+        "prev_date" -> F.min_by(col("date"), col("priority")).over(previousGroup),
+        "prev_datetime" -> F.max("datetime").over(previousGroup),
+        "rows_before" -> F.count(lit(1)).over(
+          byConceptOrder.rangeBetween(Window.unboundedPreceding, -1))))
+
+    // Hours from the previous row, or from midnight on a new day. The
+    // reference takes the previous datetime after dropping each visit's first
+    // row, so the visit's second row has none and gets no same-day token.
+    def hourDelta(date: Column, datetime: Column, prevDate: Column, prevDatetime: Column,
+        isSecondRow: Column): Column =
+      when(prevDate === date, when(!isSecondRow,
+          F.floor((F.unix_timestamp(datetime) - F.unix_timestamp(prevDatetime)) / 3600)))
+        .otherwise(hourOfDay(datetime))
+
+    // ------------------------------------------- inpatient tokens on events
+    val groupStart = col("is_inpatient") && col("is_boundary") && col("prev_date").isNotNull
+    val dayDelta = F.datediff(col("date"), col("prev_date"))
+    val eventHourDelta = hourDelta(col("date"), col("datetime"), col("prev_date"),
+      col("prev_datetime"), col("rows_before") === 1)
+    val hours = lit(includeInpatientHourToken)
+    val eventTokens = Seq(
+      when(groupStart && dayDelta =!= 0, row(columns, withoutValue ++ Map(
+        "standard_concept_id" -> TimeTokens.inpatientToken(inpatientAttType, dayDelta),
+        "priority" -> (col("priority") - 0.01)))),
+      when(hours && groupStart && eventHourDelta > 0, row(columns, withoutValue ++ Map(
+        "standard_concept_id" -> TimeTokens.hourToken(eventHourDelta),
+        "priority" -> (col("priority") - 0.01 + 0.001)))))
+
+    // ------------------------------------------- visit tokens on the anchor
+    val visitFields = withoutValue ++ Map(
+      "person_id" -> col("v_person_id"),
+      "visit_start_date" -> col("v_start_date"),
+      "visit_start_datetime" -> col("v_start_datetime"),
+      "visit_concept_id" -> col("v_concept_id"),
+      "age" -> col("v_age"),
+      "domain" -> lit("visit"),
+      "mlm_skip_value" -> lit(0),
+      "date_in_week" -> (F.unix_timestamp(col("v_start_date")) / lit(24 * 60 * 60 * 7)).cast("int"))
+    def visitToken(concept: Column, date: Column, datetime: Column, visitConceptOrder: Column,
+        conceptOrder: Column, priority: Double, condition: Column = lit(true)): Column =
+      when(col("is_anchor") && condition, row(columns, visitFields ++ Map(
+        "standard_concept_id" -> concept, "date" -> date, "datetime" -> datetime,
+        "visit_concept_order" -> visitConceptOrder, "concept_order" -> conceptOrder,
+        "priority" -> lit(priority))))
+
+    val startOfVisit = F.to_timestamp(col("v_start_date"))
+    // a visit's last minute: end date + 1 day − 1 minute
+    val endOfVisit = F.date_add(col("v_end_date"), 1).cast(TimestampType) - F.expr("INTERVAL 1 MINUTE")
+    def atVisitStart(concept: Column, priority: Double, condition: Column = lit(true),
+        conceptOrder: Column = lit(0)): Column =
+      visitToken(concept, col("v_start_date"), startOfVisit, col("min_visit_concept_order"),
+        conceptOrder, priority, condition)
+    def atVisitEnd(concept: Column, priority: Double, condition: Column = lit(true)): Column =
+      visitToken(concept, col("v_end_date"), endOfVisit, col("max_visit_concept_order"),
+        col("max_concept_order") + 1, priority, condition)
+
+    val visitStart = atVisitStart(lit(VsToken), VsTokenPriority,
+      conceptOrder = col("min_concept_order") - 1)
+    val visitEnd = atVisitEnd(lit(VeToken), VeTokenPriority)
     // inter-visit gap from the previous visit's end, clamped at 0; none
     // before a member's first visit
-    val gap = F.datediff(col("visit_start_date"), col("prev_visit_end_date"))
-    val timeDelta = when(gap < 0, lit(0)).otherwise(gap)
-    val interVisitAtt = when(col("prev_visit_end_date").isNotNull,
-      atVisitStart(TimeTokens.token(attType, timeDelta), AttTokenPriority))
+    val gap = F.datediff(col("v_start_date"), col("prev_visit_end_date"))
+    val interVisitAtt = atVisitStart(
+      TimeTokens.token(attType, when(gap < 0, lit(0)).otherwise(gap)), AttTokenPriority,
+      col("prev_visit_end_date").isNotNull)
     val visitType = atVisitStart(
-      when(col("visit_concept_id").cast("string") === "0", lit(VisitUnknownToken))
-        .otherwise(col("visit_concept_id").cast("string")),
+      when(col("v_concept_id").cast("string") === "0", lit(VisitUnknownToken))
+        .otherwise(col("v_concept_id").cast("string")),
       VisitTypeTokenPriority)
     // hours from midnight to the start of an inpatient visit; none at midnight
-    val firstHourDelta = F.floor(
-      (F.unix_timestamp(col("visit_start_datetime")) -
-        F.unix_timestamp(col("visit_start_datetime").cast(DateType))) / 3600)
-    val firstHour = when(isInpatient && firstHourDelta > 0,
-      atVisitStart(TimeTokens.hourToken(firstHourDelta), FirstVisitHourTokenPriority))
+    val firstHourDelta = hourOfDay(col("v_start_datetime"))
+    val firstHour = atVisitStart(TimeTokens.hourToken(firstHourDelta), FirstVisitHourTokenPriority,
+      hours && col("v_inpatient") && firstHourDelta > 0)
+
+    // the discharge token closes an inpatient visit, and measures its
+    // inpatient ATT and hour tokens from the visit's last concept_order group
+    val discharged = F.coalesce(col("v_discharged_to").cast("string"), lit("0"))
+    val dischargeDayDelta = F.datediff(col("v_end_date"), col("last.date"))
+    val dischargeHourDelta = hourDelta(col("v_end_date"), endOfVisit, col("last.date"),
+      col("last.datetime"), col("visit_rows") === 1)
+    val afterLastGroup = col("is_inpatient") && col("last.date").isNotNull
+    val dischargeTokens = Seq(
+      atVisitEnd(when(discharged === "0", lit(DischargeUnknownToken)).otherwise(discharged),
+        DischargeTokenPriority, col("is_inpatient")),
+      atVisitEnd(TimeTokens.inpatientToken(inpatientAttType, dischargeDayDelta),
+        DischargeTokenPriority - 0.01, afterLastGroup && dischargeDayDelta =!= 0),
+      atVisitEnd(TimeTokens.hourToken(dischargeHourDelta), DischargeTokenPriority - 0.01 + 0.001,
+        hours && afterLastGroup && dischargeHourDelta > 0))
 
     val visitTokens =
       (if (excludeVisitTokens) Seq(interVisitAtt) else Seq(visitStart, interVisitAtt, visitEnd)) ++
-        (if (includeVisitType) Seq(visitType) else Nil) ++
-        (if (includeInpatientHourToken) Seq(firstHour) else Nil)
+        (if (includeVisitType) Seq(visitType) else Nil) :+ firstHour
 
-    val prevVisitEndDate = F.lag("visit_end_date", 1).over(
-      Window.partitionBy("person_id", "cohort_member_id").orderBy("visit_rank_order"))
-
-    val artificialTokens = tryPersist(
-      visitOcc.drop("discharged_to_concept_id")
-        .withColumn("prev_visit_end_date", prevVisitEndDate)
-        .select(col("*"), F.explode(F.array(visitTokens: _*)).as("token"))
-        .where(col("token").isNotNull)
-        .drop("date")
-        .select(col("*"), col("token.*"))
-        .drop(Seq("token", "prev_visit_end_date", "visit_end_date") ++ bounds: _*),
-      "artificial_tokens")
-
-    // ---------------------------------------------------------- inpatient path
-    val inpatientVisits = visitOcc
-      .where(isInpatient)
-      .select("visit_occurrence_id", "visit_end_date", "cohort_member_id")
-
-    val inpatientEventsRaw = patientEvents
-      .join(inpatientVisits, Seq("visit_occurrence_id", "cohort_member_id"))
-      .withColumn("visit_end_date",
-        F.coalesce(col("visit_end_date"),
-          F.max("date").over(Window.partitionBy("cohort_member_id", "visit_occurrence_id"))))
-      .withColumn("date",
-        when(col("date") < col("visit_start_date"), col("visit_start_date"))
-          .otherwise(when(col("date") > col("visit_end_date"), col("visit_end_date"))
-            .otherwise(col("date"))))
-      .withColumn("priority", col("priority") + col("concept_order") * 0.1)
-      .drop("visit_end_date")
-
-    val dischargeEvents = visitOcc
-      .where(isInpatient)
-      // cast first: ANSI coercion would otherwise resolve coalesce(int, "0")
-      // numerically and later token literals would fail to cast
-      .withColumn("standard_concept_id",
-        F.coalesce(col("discharged_to_concept_id").cast("string"), lit("0")))
-      .withColumn("visit_concept_order", col("max_visit_concept_order"))
-      .withColumn("concept_order", col("max_concept_order") + 1)
-      .withColumn("date", col("visit_end_date"))
-      .withColumn("datetime", endOfVisit)
-      .withColumn("priority", lit(DischargeTokenPriority))
-      .drop(Seq("discharged_to_concept_id", "visit_end_date") ++ bounds: _*)
-      .withColumn("standard_concept_id",
-        when(col("standard_concept_id").cast("string") === "0", lit(DischargeUnknownToken))
-          .otherwise(col("standard_concept_id")))
-
-    val inpatientEvents = tryPersist(
-      inpatientEventsRaw.unionByName(dischargeEvents), "inpatient_events")
-
-    val prevDate = F.lag("date", 1).over(
-      Window.partitionBy("cohort_member_id", "visit_occurrence_id").orderBy("concept_order"))
-
-    // one representative event per (visit, concept_order) span boundary
-    val inpatientDayAttEvents = withoutValue(inpatientEvents
-      .withColumn("is_span_boundary",
-        F.row_number().over(
-          Window.partitionBy("cohort_member_id", "visit_occurrence_id", "concept_order")
-            .orderBy("priority")))
-      .where(col("is_span_boundary") === 1)
-      .withColumn("prev_date", prevDate)
-      .withColumn("date_delta",
-        when(col("prev_date").isNull, 0).otherwise(F.datediff(col("date"), col("prev_date"))))
-      .where(col("date_delta") =!= 0)
-      .where(col("prev_date").isNotNull)
-      .withColumn("standard_concept_id",
-        TimeTokens.inpatientToken(inpatientAttType, col("date_delta")))
-      .withColumn("priority", col("priority") - 0.01)
-      .drop("prev_date", "date_delta", "is_span_boundary"))
-
-    val inpatientAttEvents = tryPersist(
-      if (!includeInpatientHourToken) inpatientDayAttEvents
-      else {
-        val prevDatetime = F.lag("datetime", 1).over(
-          Window.partitionBy("cohort_member_id", "visit_occurrence_id").orderBy("concept_order"))
-        val hourDeltaBetweenGroups = when(col("prev_datetime").isNull, 0)
-          .otherwise(F.floor((F.unix_timestamp(col("datetime")) - F.unix_timestamp(col("prev_datetime"))) / 3600))
-        val hourOnNewDay = F.floor(
-          (F.unix_timestamp(col("datetime")) - F.unix_timestamp(col("datetime").cast(DateType))) / 3600)
-        val hourDelta = when(col("prev_date") === col("date"), hourDeltaBetweenGroups)
-          .otherwise(hourOnNewDay)
-
-        val inpatientHourEvents = withoutValue(inpatientEvents
-          .withColumn("prev_date", prevDate)
-          .where(col("prev_date").isNotNull)
-          .withColumn("prev_datetime", prevDatetime)
-          .withColumn("hour_delta", hourDelta)
-          .where(col("hour_delta") > 0)
-          .withColumn("standard_concept_id", TimeTokens.hourToken(col("hour_delta")))
-          .withColumn("priority", col("priority") - 0.01 + 0.001)
-          .drop("prev_date", "prev_datetime", "hour_delta"))
-
-        inpatientDayAttEvents.unionByName(inpatientHourEvents)
-      },
-      "inpatient_att_events")
-
-    validateEvents(inpatientEvents, s"$name/inpatient_events")
-    validateEvents(inpatientAttEvents, s"$name/inpatient_att_events")
-
-    val otherEvents = tryPersist(
-      patientEvents.join(
-        inpatientVisits.select("visit_occurrence_id", "cohort_member_id"),
-        Seq("visit_occurrence_id", "cohort_member_id"), "left_anti"),
-      "other_events")
-
-    val allEvents = inpatientEvents.unionByName(inpatientAttEvents).unionByName(otherEvents)
-    validateEvents(allEvents, s"$name/patient_events")
-    validateEvents(artificialTokens, s"$name/artificial_tokens")
-
-    allEvents.unionByName(artificialTokens)
+    tryPersist(
+      emit(stream, Seq("cohort_member_id"),
+        Seq(row(columns)) ++ eventTokens ++ visitTokens ++ dischargeTokens),
+      "events")
   }
+
+  private def hourOfDay(datetime: Column): Column =
+    F.floor((F.unix_timestamp(datetime) - F.unix_timestamp(datetime.cast(DateType))) / 3600)
 }

@@ -15,14 +15,18 @@ import graft.omop.OmopSchema._
  *
  * Reference semantics preserved exactly from
  * /root/reference/src/cehrbert_data/decorators/clinical_event_decorator.py:26-157:
- *  - visit rank = row_number over (person, member) by
+ *  - visit rank = row_number over the member's visits (per visit person) by
  *    (visit_start_datetime, is_inpatient, expired, visit_occurrence_id);
  *  - outpatient visit_start_datetime is clamped to start-of-day;
  *  - events `.distinct()` after the join (duplicate collapse is load-bearing).
  *
- * Scale: both windows partition by (person, member) or (member, visit) — high
- * cardinality keys, so no single-partition hazard; the visits join shuffles on
- * visit_occurrence_id.
+ * One pass: the events join the visit table once, on its key, so no event
+ * row fans out. The visit rank is a dense_rank over the event rows rather
+ * than a row_number over a distinct visit table: the events carry each of
+ * the member's visits at least once, and the last order key,
+ * visit_occurrence_id, tells any two visits apart, so the two ranks agree.
+ * Every window partitions by cohort_member_id plus other keys, so one hash
+ * partitioning on cohort_member_id serves them all and the distinct.
  */
 final class ClinicalEventDecorator(
     visitOccurrence: DataFrame,
@@ -32,33 +36,24 @@ final class ClinicalEventDecorator(
   override def name: String = "clinical_events"
 
   override protected def decorateImpl(patientEvents: DataFrame): DataFrame = {
-    val validVisitIds = patientEvents.select("visit_occurrence_id", "cohort_member_id").distinct()
-
-    val visitRank = F.row_number().over(
-      Window.partitionBy("person_id", "cohort_member_id")
-        .orderBy("visit_start_datetime", "is_inpatient", "expired", "visit_occurrence_id"))
-
     // visit_occurrence may itself carry cohort_member_id (prediction cohorts)
     val joinKeys =
       if (visitOccurrence.columns.contains("cohort_member_id"))
         Seq("visit_occurrence_id", "cohort_member_id")
       else Seq("visit_occurrence_id")
 
-    val visits = visitOccurrence
-      .join(validVisitIds, joinKeys)
-      .select(
-        col("person_id"),
-        col("cohort_member_id"),
-        col("visit_occurrence_id"),
-        col("visit_start_date").cast(DateType).as("visit_start_date"),
-        F.to_timestamp(col("visit_start_datetime")).as("visit_start_datetime"),
-        col("visit_concept_id").cast("int").isin(InpatientConceptIdsDecorator: _*)
-          .cast("int").as("is_inpatient"),
-        when(col("discharged_to_concept_id").cast("int") === DeceasedConceptId, lit(1))
-          .otherwise(lit(0)).as("expired"))
-      .withColumn("visit_rank_order", visitRank)
-      .withColumn("visit_segment", col("visit_rank_order") % lit(2) + 1)
-      .drop("person_id", "expired")
+    val visits = visitOccurrence.select(joinKeys.map(col) ++ Seq(
+      col("person_id").as("visit_person_id"),
+      col("visit_start_date").cast(DateType).as("visit_start_date"),
+      F.to_timestamp(col("visit_start_datetime")).as("visit_start_datetime"),
+      col("visit_concept_id").cast("int").isin(InpatientConceptIdsDecorator: _*)
+        .cast("int").as("is_inpatient"),
+      when(col("discharged_to_concept_id").cast("int") === DeceasedConceptId, lit(1))
+        .otherwise(lit(0)).as("expired")): _*)
+
+    val visitRank = F.dense_rank().over(
+      Window.partitionBy("cohort_member_id", "visit_person_id")
+        .orderBy("visit_start_datetime", "is_inpatient", "expired", "visit_occurrence_id"))
 
     val conceptOrder = when(col("is_inpatient") === 1,
         F.dense_rank().over(
@@ -75,12 +70,15 @@ final class ClinicalEventDecorator(
       .otherwise(col("visit_start_datetime")).cast(TimestampType)
 
     val decorated = patientEvents
-      .join(visits, Seq("cohort_member_id", "visit_occurrence_id"))
+      .join(visits, joinKeys)
+      .repartition(col("cohort_member_id"))
+      .withColumn("visit_rank_order", visitRank)
+      .withColumn("visit_segment", col("visit_rank_order") % lit(2) + 1)
       .withColumn("datetime", F.coalesce(F.to_timestamp(col("datetime")), F.to_timestamp(col("date"))))
       .withColumn("visit_start_datetime", visitStartDatetime)
       .withColumn("concept_order", conceptOrder)
       .withColumn("visit_concept_order", visitConceptOrder)
-      .drop("is_inpatient")
+      .drop("is_inpatient", "expired", "visit_person_id")
       .distinct()
 
     val withPriority = decorated

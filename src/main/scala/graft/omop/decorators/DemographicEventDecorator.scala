@@ -11,10 +11,10 @@ import graft.omop.OmopSchema._
  * Prepends prompt tokens — year:YYYY, age:N (or age:L-U bucket), gender
  * concept, race concept — anchored at each patient's first history token.
  *
- * Two barriers: the year tokens (one per patient's first token), then one
- * join of the demographic rows to them whose single `explode` emits the
- * age, gender and race tokens. A patient without a demographic row keeps
- * its year token only.
+ * One pass: the events join the demographic rows once, on person_id, a
+ * window marks each (cohort_member_id, person_id)'s first token, and one
+ * `explode` emits each row with the tokens anchored on that first one. A
+ * patient without a demographic row keeps its year token only.
  *
  * Reference: /root/reference/src/cehrbert_data/decorators/
  * demographic_event_decorator.py:33-157 (priorities −10…−7 put these before
@@ -30,28 +30,21 @@ final class DemographicEventDecorator(
 
   override protected def decorateImpl(patientEvents: DataFrame): DataFrame = {
     if (patientDemographic.isEmpty) return patientEvents
-    val demo = patientDemographic.get
+    val keys = Seq("cohort_member_id", "person_id")
+    val columns = patientEvents.columns.toSeq.diff(keys)
 
+    // datetime breaks the reference's ties (two events of one concept first
+    // in a visit) towards the earlier event
     val firstToken = F.row_number().over(
       Window.partitionBy("cohort_member_id", "person_id")
-        .orderBy("visit_start_datetime", "visit_occurrence_id", "priority", "standard_concept_id"))
+        .orderBy("visit_start_datetime", "visit_occurrence_id", "priority", "standard_concept_id",
+          "datetime"))
 
-    val patientFirstToken = withoutValue(patientEvents
-      .withColumn("token_order", firstToken)
-      .where(col("token_order") === 1)
-      .drop("token_order"))
-
-    val startYearToken = tryPersist(patientFirstToken
-      .withColumn("standard_concept_id",
-        concat(lit("year:"), F.year(col("date")).cast(StringType)))
-      .withColumn("priority", lit(YearTokenPriority))
-      .withColumn("visit_segment", lit(0))
-      .withColumn("date_in_week", lit(0))
-      .withColumn("age", lit(-1))
-      .withColumn("visit_rank_order", lit(0))
-      .withColumn("visit_concept_order", lit(0))
-      .withColumn("concept_order", lit(0)),
-      "sequence_start_year_tokens")
+    val events = patientEvents
+      .join(patientDemographic.get.select(col("person_id"), col("birth_datetime"),
+          col("gender_concept_id"), col("race_concept_id"), lit(true).as("has_demographic")),
+        Seq("person_id"), "left")
+      .withColumn("is_first", firstToken === 1)
 
     val ageToken =
       if (useAgeGroup) {
@@ -72,21 +65,26 @@ final class DemographicEventDecorator(
         F.coalesce(col("race_concept_id"), lit(0)) =!= 0,
         col("race_concept_id").cast(StringType))
       .otherwise(lit(RaceUnknownToken))
+
+    // every prompt token is the first token with the year token's fields
+    val yearFields = withoutValue ++ Map(
+      "standard_concept_id" -> concat(lit("year:"), F.year(col("date")).cast(StringType)),
+      "priority" -> lit(YearTokenPriority),
+      "visit_segment" -> lit(0),
+      "date_in_week" -> lit(0),
+      "age" -> lit(-1),
+      "visit_rank_order" -> lit(0),
+      "visit_concept_order" -> lit(0),
+      "concept_order" -> lit(0))
     def token(concept: Column, priority: Double): Column =
-      F.struct(concept.as("standard_concept_id"), lit(priority).as("priority"))
+      when(col("is_first") && col("has_demographic"), row(columns, yearFields ++ Map(
+        "standard_concept_id" -> concept, "priority" -> lit(priority))))
 
-    val demographicTokens = tryPersist(
-      demo.select("person_id", "birth_datetime", "gender_concept_id", "race_concept_id")
-        .join(startYearToken, "person_id")
-        .select(col("*"), F.explode(F.array(
-          token(ageToken, AgeTokenPriority),
-          token(genderToken, GenderTokenPriority),
-          token(raceToken, RaceTokenPriority))).as("token"))
-        .withColumn("standard_concept_id", col("token.standard_concept_id"))
-        .withColumn("priority", col("token.priority"))
-        .drop("token", "birth_datetime", "gender_concept_id", "race_concept_id"),
-      "sequence_demographic_tokens")
-
-    patientEvents.unionByName(startYearToken).unionByName(demographicTokens)
+    emit(events, keys, Seq(
+      row(columns),
+      when(col("is_first"), row(columns, yearFields)),
+      token(ageToken, AgeTokenPriority),
+      token(genderToken, GenderTokenPriority),
+      token(raceToken, RaceTokenPriority)))
   }
 }

@@ -1,9 +1,7 @@
 package graft.omop.decorators
 
-import scala.collection.immutable.ListMap
-
-import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.functions.lit
+import org.apache.spark.sql.{Column, DataFrame, functions => F}
+import org.apache.spark.sql.functions.{col, lit}
 
 import graft.core.Checkpoints
 import graft.omop.OmopSchema
@@ -14,10 +12,15 @@ import graft.omop.OmopSchema
  * the 24-column contract.
  *
  * Reference: /root/reference/src/cehrbert_data/decorators/
- * patient_event_decorator_base.py:21-90. The optional persistence folder
- * reproduces `try_persist_data` — a parquet write+reload that truncates
- * lineage between decorators (SURVEY §4: at 100 TB the decorator chain
- * otherwise builds very deep plans whose branches are re-executed).
+ * patient_event_decorator_base.py:21-90. The reference keeps the chain's
+ * plan shallow with `try_persist_data`, a parquet write+reload after each
+ * branch, because its decorators read their input in several branches and
+ * each branch re-executes the plan above it (SURVEY §4). Here each decorator
+ * is one linear pipeline over its input: at most one join to its side table
+ * (visits, demographics or death), windows keyed on cohort_member_id plus
+ * other keys, and one `explode` ([[emit]]) that yields each row together
+ * with the synthetic tokens anchored on it. Nothing re-reads the input, so
+ * the optional persistence folder is one barrier per decorator at most.
  */
 trait PatientEventDecorator {
 
@@ -37,16 +40,28 @@ trait PatientEventDecorator {
   protected def tryPersist(df: DataFrame, sub: String): DataFrame =
     Checkpoints.lineageBarrier(df, persistenceFolder, s"$name/$sub")
 
-  /** Sets the six value columns of a synthetic token, which carries no
-    * value: concept_value_mask 0, number_as_value 0.0f, concept_as_value
-    * "0", is_numeric_type 0, and unit and event_group_id N/A. The ATT and
+  /** One output row as a struct of the event `columns`: each one as the
+    * current row has it, unless `fields` sets it. */
+  protected def row(columns: Seq[String], fields: Map[String, Column] = Map.empty): Column =
+    F.struct(columns.map(c => fields.getOrElse(c, col(c)).as(c)): _*)
+
+  /** Every row that `rows` builds from each row of `df`, in one explode (a
+    * null entry emits nothing). Every emitted row keeps its anchor's `keys`
+    * outside the explode, so the stream stays partitioned on them. */
+  protected def emit(df: DataFrame, keys: Seq[String], rows: Seq[Column]): DataFrame =
+    df.select(keys.map(col) :+ F.explode(F.array(rows: _*)).as("row"): _*)
+      .where(col("row").isNotNull)
+      .select(keys.map(col) :+ col("row.*"): _*)
+
+  /** The six value columns of a synthetic token, which carries no value:
+    * concept_value_mask 0, number_as_value 0.0f, concept_as_value "0",
+    * is_numeric_type 0, and unit and event_group_id N/A. The ATT and
     * demographic decorators give their tokens these values only here. */
-  protected def withoutValue(df: DataFrame): DataFrame =
-    df.withColumns(ListMap(
-      "concept_value_mask" -> lit(0),
-      "number_as_value" -> lit(0.0f),
-      "concept_as_value" -> lit("0"),
-      "is_numeric_type" -> lit(0),
-      "unit" -> lit(OmopSchema.NA),
-      "event_group_id" -> lit(OmopSchema.NA)))
+  protected val withoutValue: Map[String, Column] = Map(
+    "concept_value_mask" -> lit(0),
+    "number_as_value" -> lit(0.0f),
+    "concept_as_value" -> lit("0"),
+    "is_numeric_type" -> lit(0),
+    "unit" -> lit(OmopSchema.NA),
+    "event_group_id" -> lit(OmopSchema.NA))
 }

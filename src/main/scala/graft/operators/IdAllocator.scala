@@ -63,6 +63,16 @@ object IdAllocator {
     df.withColumn(idCol,
       (row_number().over(Window.orderBy(order: _*)) + lit(startAt - 1)).cast(LongType))
 
+  /** [[sequentialIdSinglePartition]] continuing an id range: the n-th row in
+    * `order` gets n plus the max of `above` over all of `df`, in the same
+    * window. The sum of row_number's int and `above` is bigint for string ids. */
+  def sequentialIdAbove(df: DataFrame, order: Seq[Column], idCol: String,
+                        above: Column): DataFrame = {
+    val all = Window.orderBy(order: _*)
+    df.withColumn(idCol, row_number().over(all) +
+      max(above).over(all.rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing)))
+  }
+
   /**
    * `dense_rank().over(Window.orderBy(keys))` replacement: one sequential id
    * per DISTINCT key tuple, numbered 1..K in key sort order (identical to the

@@ -8,6 +8,7 @@ import java.time.{LocalDateTime, ZoneOffset}
 import scala.jdk.CollectionConverters._
 
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.SparkSpecBase
@@ -305,23 +306,81 @@ class SequenceSpec extends SparkSpecBase {
     }
   }
 
-  test("persistence layout: one demographic token barrier, first-hour tokens with the visit tokens") {
+  test("persistence layout: at most one barrier per decorator") {
     val folder = Files.createTempDirectory("graft-seq-layout").toString
     Sequences.createSequenceDataWithAtt(patientEvents, visitWithAge,
       patientDemographic = Some(demographicsWithoutPatient4),
+      death = Some(death),
       excludeDemographic = false,
       includeInpatientHourToken = true,
       persistenceFolder = Some(folder)).count()
 
-    val demographicBarriers = Files.list(Paths.get(folder, "demographic_events"))
-      .iterator().asScala.map(_.getFileName.toString).toSet
-    assert(demographicBarriers == Set("sequence_start_year_tokens", "sequence_demographic_tokens"))
+    def children(dir: java.nio.file.Path) = Files.list(dir).iterator().asScala.toSeq
+    val barriers = children(Paths.get(folder)).flatMap(decorator =>
+      children(decorator).map(b => s"${decorator.getFileName}/${b.getFileName}")).toSet
+    assert(barriers == Set("clinical_events/events", "att_events/events", "death_tokens/death_events"))
 
+    // the ATT barrier holds the first-hour tokens; the death barrier one row
+    // per deceased member
     val firstHour = $"priority" === OmopSchema.FirstVisitHourTokenPriority
-    val visitTokens = spark.read.parquet(s"$folder/att_events/artificial_tokens")
-    assert(visitTokens.where(firstHour).select("person_id", "standard_concept_id")
-      .as[(Long, String)].collect().sorted.toSeq == Seq(2L -> "i-H8", 3L -> "i-H8"))
-    assert(spark.read.parquet(s"$folder/att_events/inpatient_att_events").where(firstHour).isEmpty)
+    assert(spark.read.parquet(s"$folder/att_events/events").where(firstHour)
+      .select("person_id", "standard_concept_id").as[(Long, String)].collect().sorted.toSeq ==
+      Seq(2L -> "i-H8", 3L -> "i-H8"))
+    assert(spark.read.parquet(s"$folder/death_tokens/death_events")
+      .select("person_id").as[Long].collect().sorted.toSeq == Seq(2L, 3L))
+  }
+
+  test("clinical visit rank: a dense rank over the events equals a row_number over the visits") {
+    // the rank the reference takes: row_number over each member's distinct
+    // visits, per visit person
+    val visitRank = row_number().over(
+      Window.partitionBy("person_id", "cohort_member_id")
+        .orderBy("visit_start_datetime", "is_inpatient", "expired", "visit_occurrence_id"))
+    // person 6: three visits starting at the same instant (told apart by
+    // inpatient, expired and id) and one the day before, for two members
+    val visits = withAge(Seq(
+        (601L, 6L, 9202, d("2020-02-01"), ts("2020-02-01 09:00:00"), null.asInstanceOf[Integer]),
+        (602L, 6L, 9201, d("2020-02-01"), ts("2020-02-01 09:00:00"), null.asInstanceOf[Integer]),
+        (603L, 6L, 9202, d("2020-02-01"), ts("2020-02-01 09:00:00"), Integer.valueOf(OmopSchema.DeceasedConceptId)),
+        (604L, 6L, 9202, d("2020-01-31"), ts("2020-01-31 09:00:00"), null.asInstanceOf[Integer]))
+      .toDF("visit_occurrence_id", "person_id", "visit_concept_id", "visit_start_date",
+        "visit_start_datetime", "discharged_to_concept_id")
+      .withColumn("visit_end_date", col("visit_start_date")), cohortPerson.unionByName(
+        Seq((6L, ts("1985-04-01 00:00:00"), 8532, 8516)).toDF(person.columns.toIndexedSeq: _*)))
+    val events = Seq((61L, 601L), (61L, 601L), (61L, 602L), (61L, 603L), (61L, 603L),
+        (61L, 603L), (61L, 604L), (62L, 603L), (62L, 601L))
+      .zipWithIndex.map { case ((m, v), i) => (m, v, s"C$i") }
+      .toDF("cohort_member_id", "visit_occurrence_id", "standard_concept_id")
+      .withColumn("person_id", lit(6L))
+      .join(visits.select("visit_occurrence_id", "visit_start_date", "visit_start_datetime",
+        "visit_concept_id"), "visit_occurrence_id")
+      .withColumn("date", col("visit_start_date"))
+      .withColumn("datetime", col("visit_start_datetime"))
+      .drop("visit_start_date", "visit_start_datetime")
+      .withColumn("domain", lit("condition"))
+      .withColumn("event_group_id", lit(null).cast("string"))
+      .withColumn("number_as_value", lit(null).cast("float"))
+      .withColumn("concept_as_value", lit(null).cast("string"))
+      .withColumn("unit", lit(OmopSchema.NA))
+      .withColumn("age", lit(35))
+
+    val expected = events.select("visit_occurrence_id", "cohort_member_id").distinct()
+      .join(visits, "visit_occurrence_id")
+      .select(col("person_id"), col("cohort_member_id"), col("visit_occurrence_id"),
+        col("visit_start_datetime"),
+        col("visit_concept_id").isin(OmopSchema.InpatientConceptIdsDecorator: _*).cast("int")
+          .as("is_inpatient"),
+        (coalesce(col("discharged_to_concept_id"), lit(0)) === OmopSchema.DeceasedConceptId)
+          .cast("int").as("expired"))
+      .select(col("cohort_member_id"), col("visit_occurrence_id"), visitRank.as("rank"))
+      .as[(Long, Long, Int)].collect().sorted.toSeq
+    val decorated = new ClinicalEventDecorator(visits).decorate(events)
+    assert(decorated.select("cohort_member_id", "visit_occurrence_id", "visit_rank_order")
+      .distinct().as[(Long, Long, Int)].collect().sorted.toSeq == expected)
+    assert(expected == Seq((61L, 601L, 2), (61L, 602L, 4), (61L, 603L, 3), (61L, 604L, 1),
+      (62L, 601L, 1), (62L, 603L, 2)))
+    // the visit join keeps each event row once
+    assert(decorated.count() == events.count())
   }
 
   test("createSequenceData (classic) orders by week bins") {
