@@ -4,7 +4,6 @@ import org.apache.spark.sql.{DataFrame, SparkSession, functions => F}
 import org.apache.spark.sql.functions.{col, lit, when}
 import org.apache.spark.sql.types.{DateType, FloatType, StringType, TimestampType}
 
-import graft.core.Checkpoints
 import graft.omop.OmopSchema._
 
 /**
@@ -20,6 +19,10 @@ import graft.omop.OmopSchema._
  * concept unit lookup is broadcast (vocabulary tables are MBs, events are TBs),
  * and `.distinct()` shuffles on the full event row — the reference's dedup
  * semantic, kept as-is.
+ *
+ * Deviation: the reference caches numeric-domain events in a folder named
+ * after the domain alone and reads it back on later runs, whatever options or
+ * input produced it (spark_utils.py:1072-1121). Here they are always computed.
  */
 object Events {
 
@@ -105,17 +108,8 @@ object Events {
    * once; the concept join is broadcast: vocabulary is tiny next to events).
    */
   def numericEvents(domainTable: DataFrame, concept: DataFrame, keys: DomainKeys,
-                    aggregateByHour: Boolean = false,
-                    persistence: Option[String] = None,
-                    refresh: Boolean = false): DataFrame = {
+                    aggregateByHour: Boolean = false): DataFrame = {
     val domainName = keys.domainTableName.split("_")(0)
-    val processedName = s"processed_$domainName"
-
-    val spark = domainTable.sparkSession
-    val processed = persistence.map(folder => s"$folder/$processedName")
-    if (!refresh && processed.exists(Checkpoints.exists(spark, _)))
-      return Preprocess.normalize(spark.read.parquet(processed.get))
-
     // device_exposure carries quantity (no value_as_concept_id); measurement
     // and observation carry value_as_number + value_as_concept_id
     val valueNumber =
@@ -163,21 +157,19 @@ object Events {
           .drop("lab_hour")
       } else numeric
 
-    Checkpoints.lineageBarrier(numericOut.unionByName(nonNumeric), persistence, processedName)
+    numericOut.unionByName(nonNumeric)
   }
 
   /** Route a preprocessed domain table into unified events
     * (spark_utils.py:158-237). */
   def extractEventsByDomain(domainTable: DataFrame,
                             concept: Option[DataFrame] = None,
-                            aggregateByHour: Boolean = false,
-                            refresh: Boolean = false,
-                            persistence: Option[String] = None): DataFrame =
+                            aggregateByHour: Boolean = false): DataFrame =
     getKeyFields(domainTable).map { keys =>
       if (isDomainNumeric(keys.domainTableName)) {
         val c = concept.getOrElse(throw new IllegalArgumentException(
           s"concept table required for numeric domain ${keys.domainTableName}"))
-        numericEvents(domainTable, c, keys, aggregateByHour, persistence, refresh)
+        numericEvents(domainTable, c, keys, aggregateByHour)
           .where(col("standard_concept_id") =!= "0")
       } else nonNumericEvents(domainTable, keys)
     }.reduce(_.unionByName(_))
@@ -203,7 +195,6 @@ object Events {
                         withDiagnosisRollup: Boolean = false,
                         withDrugRollup: Boolean = false,
                         qualifiedConceptList: Option[DataFrame] = None,
-                        refreshMeasurement: Boolean = false,
                         aggregateByHour: Boolean = false,
                         keepOrphanRecords: Boolean = false): DataFrame = {
     val concept = Preprocess.domainTable(spark, inputFolder, Concept)
@@ -215,9 +206,7 @@ object Events {
       extractEventsByDomain(
         invalidateVisitId(domainTable, visitOccurrence),
         concept = Some(concept),
-        aggregateByHour = aggregateByHour,
-        refresh = refreshMeasurement,
-        persistence = Some(inputFolder))
+        aggregateByHour = aggregateByHour)
     }.reduce(_.unionByName(_))
 
     qualifiedConceptList.foreach { q =>
@@ -234,11 +223,10 @@ object Events {
       .withColumn("age", Sequences.ageAt(col("date"), col("birth_datetime")))
 
     if (includeVisitType) {
-      val vo = Preprocess.domainTable(spark, inputFolder, VisitOccurrence)
       val recordCols = Seq("person_id", "standard_concept_id", "date", "datetime",
         "visit_occurrence_id", "domain", "unit", "number_as_value",
         "concept_as_value", "event_group_id", "age")
-      out = out.join(vo.select("visit_occurrence_id", "visit_concept_id"),
+      out = out.join(visitOccurrence.select("visit_occurrence_id", "visit_concept_id"),
           Seq("visit_occurrence_id"), "left_outer")
         .select((recordCols :+ "visit_concept_id").map(col): _*)
     }

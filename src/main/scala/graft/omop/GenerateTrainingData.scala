@@ -20,7 +20,9 @@ import graft.functions.TimeTokens.AttType
  *  - the events↔visit join shuffles on visit_occurrence_id; person-level
  *    windows shuffle on (person_id, cohort_member_id) — all high-cardinality;
  *  - the age<90 privacy filter and concept-list semi-join run BEFORE sequence
- *    assembly so the expensive collect_set sees only surviving rows.
+ *    assembly so the expensive collect_set sees only surviving rows;
+ *  - no visit-id check before extraction (the inner events↔visit join drops
+ *    the same events), and no numeric-event cache (see [[Events]]).
  */
 object GenerateTrainingData {
 
@@ -53,14 +55,11 @@ object GenerateTrainingData {
     val concept = Preprocess.domainTable(spark, cfg.inputFolder, OmopSchema.Concept)
     val visitOccurrence = Preprocess.domainTable(spark, cfg.inputFolder, OmopSchema.VisitOccurrence)
 
-    var events = cfg.domainTableList.map { name =>
-      val domainTable = Preprocess.domainTable(spark, cfg.inputFolder, name,
-        withDrugRollup = cfg.withDrugRollup)
+    val events = cfg.domainTableList.map { name =>
       Events.extractEventsByDomain(
-        Events.invalidateVisitId(domainTable, visitOccurrence),
+        Preprocess.domainTable(spark, cfg.inputFolder, name, withDrugRollup = cfg.withDrugRollup),
         concept = Some(concept),
-        aggregateByHour = cfg.aggregateByHour,
-        persistence = cfg.outputFolder)
+        aggregateByHour = cfg.aggregateByHour)
     }.reduce(_.unionByName(_))
 
     val visitSlim = visitOccurrence.select("visit_occurrence_id", "visit_start_date",

@@ -14,9 +14,6 @@ import graft.core.{Checkpoints, Tables}
  */
 object Preprocess {
 
-  /** Lowercase + date/datetime casts (spark_utils.py:252-260). */
-  def normalize(df: DataFrame): DataFrame = Tables.normalize(df)
-
   /** A person row's birth timestamp: `birth_datetime`, else January 1 of
     * `year_of_birth`. */
   val birthDatetime: Column = F.coalesce(col("birth_datetime"),

@@ -31,10 +31,13 @@ import graft.omop.{ArtificialVisits, Events, OmopSchema, Preprocess, Sequences}
  * `cohort_ehr_records` (the observation-window events per member, before
  * feature assembly). `cohort_member_id` comes from the RDD-backed
  * [[graft.operators.IdAllocator.denseKeyId]], which no plan can reuse, so
- * without the cut every consumer of the cohort (both feature joins, the
- * cohort index every decorator reads, the final join and the split sink)
- * re-runs the labeling SQL, the range-partition sample and the sort, and
- * every decorator barrier re-runs the member join.
+ * without the cut every consumer of the cohort (the feature join, the
+ * cohort index the decorators read, the final join and the split sink)
+ * re-runs the labeling SQL, the range-partition sample and the sort.
+ *
+ * The features join the records to the cohort once, not twice (see
+ * [[extractEhrRecordsForCohort]]), and read no numeric-event cache (see
+ * [[graft.omop.Events]]).
  */
 final class NestedCohortBuilder(cfg: NestedCohortBuilder.Config) {
   import NestedCohortBuilder._
@@ -184,7 +187,6 @@ final class NestedCohortBuilder(cfg: NestedCohortBuilder.Config) {
       withDiagnosisRollup = cfg.isRollUpConcept,
       withDrugRollup = cfg.isDrugRollUpConcept,
       qualifiedConceptList = cfg.qualifiedConceptList,
-      refreshMeasurement = cfg.refreshMeasurement,
       aggregateByHour = cfg.aggregateByHour,
       keepOrphanRecords = cfg.shouldConstructArtificialVisits)
 
@@ -222,21 +224,19 @@ final class NestedCohortBuilder(cfg: NestedCohortBuilder.Config) {
         .drop("visit_start_date", "birth_datetime")
     }
 
-    // duplicate records per cohort entry, then bound to the observation window
+    // duplicate records per cohort entry, bounded to the observation window,
+    // in one join. The cohort holds one row per cohort_member_id: the ids are
+    // dense over (person_id, index_date, visit_occurrence_id), and the
+    // safeguard in build keeps one row per (person_id, cohort_member_id,
+    // index_date). A second join on (person_id, cohort_member_id) would
+    // return the row this join already holds.
     val ehrCols = ehrRecords.columns
-    val withMember = ehrRecords.alias("ehr")
-      .join(cohort.alias("cohort"), col("ehr.person_id") === col("cohort.person_id"))
-      .select(ehrCols.map(c => col(s"ehr.$c").as(c)).toSeq :+
-        col("cohort.cohort_member_id").as("cohort_member_id"): _*)
-
-    val memberCols = withMember.columns
     val cohortEhrRecords = Checkpoints.lineageBarrier(
-      withMember.alias("ehr")
-        .join(cohort.alias("cohort"),
-          col("ehr.person_id") === col("cohort.person_id") &&
-            col("ehr.cohort_member_id") === col("cohort.cohort_member_id"))
+      ehrRecords.alias("ehr")
+        .join(cohort.alias("cohort"), col("ehr.person_id") === col("cohort.person_id"))
         .where(ehrRecordFilter())
-        .select(memberCols.map(c => col(s"ehr.$c").as(c)).toSeq: _*),
+        .select(ehrCols.map(c => col(s"ehr.$c").as(c)).toSeq :+
+          col("cohort.cohort_member_id").as("cohort_member_id"): _*),
       cacheFolder, "cohort_ehr_records")
 
     if (cfg.isFeatureConceptFrequency)
@@ -364,7 +364,6 @@ object NestedCohortBuilder {
       isRollUpConcept: Boolean = false,
       isDrugRollUpConcept: Boolean = true,
       qualifiedConceptList: Option[DataFrame] = None,
-      refreshMeasurement: Boolean = false,
       aggregateByHour: Boolean = true,
       isNewPatientRepresentation: Boolean = false,
       gptPatientSequence: Boolean = false,

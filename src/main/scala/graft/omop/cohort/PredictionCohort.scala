@@ -40,7 +40,6 @@ object PredictionCohort {
       isPredictionWindowUnbounded: Boolean = false,
       isObservationWindowUnbounded: Boolean = false,
       includeConceptList: Boolean = false,
-      refreshMeasurement: Boolean = false,
       aggregateByHour: Boolean = false,
       allowMeasurementOnly: Boolean = false,
       isPopulationEstimation: Boolean = false,
@@ -95,7 +94,6 @@ object PredictionCohort {
       isRollUpConcept = args.isRollUpConcept,
       isDrugRollUpConcept = args.isDrugRollUpConcept,
       qualifiedConceptList = None,
-      refreshMeasurement = args.refreshMeasurement,
       aggregateByHour = args.aggregateByHour,
       isNewPatientRepresentation = args.isNewPatientRepresentation,
       gptPatientSequence = args.gptPatientSequence,

@@ -47,7 +47,6 @@ object ExtractFeatures {
       isRollUpConcept: Boolean = false,
       isDrugRollUpConcept: Boolean = true,
       qualifiedConceptList: Option[DataFrame] = None,
-      refreshMeasurement: Boolean = false,
       aggregateByHour: Boolean = false,
       isNewPatientRepresentation: Boolean = true,
       isFeatureConceptFrequency: Boolean = false,
@@ -109,7 +108,6 @@ object ExtractFeatures {
       withDiagnosisRollup = cfg.isRollUpConcept,
       withDrugRollup = cfg.isDrugRollUpConcept,
       qualifiedConceptList = cfg.qualifiedConceptList,
-      refreshMeasurement = cfg.refreshMeasurement,
       aggregateByHour = cfg.aggregateByHour,
       keepOrphanRecords = cfg.shouldConstructArtificialVisits)
 

@@ -30,8 +30,7 @@ object QualifiedConceptList {
     val events = domainTableList.map { name =>
       Events.extractEventsByDomain(
         Preprocess.domainTable(spark, inputFolder, name, withDrugRollup = withDrugRollup),
-        concept = Some(concept),
-        persistence = Some(inputFolder))
+        concept = Some(concept))
     }.reduce(_.unionByName(_))
 
     events.where(col("visit_occurrence_id").isNotNull)

@@ -1,6 +1,6 @@
 package graft
 
-import java.sql.Date
+import java.sql.{Date, Timestamp}
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions.col
@@ -10,7 +10,8 @@ import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
 import org.apache.spark.sql.execution.window.WindowExec
 
 import graft.functions.TimeTokens.AttType
-import graft.omop.{GenerateTrainingData, OmopSchema, TinyCdm}
+import graft.omop.{GenerateTrainingData, OmopSchema, Preprocess, TinyCdm}
+import graft.omop.cohort.NestedCohortBuilder
 import graft.omop.decorators._
 
 /**
@@ -29,6 +30,10 @@ import graft.omop.decorators._
  * folder) is bounded in shuffle exchanges, window operators and
  * `visit_occurrence` scans. The bounds are set from the current code; a
  * change that reads an intermediate more than once again fails here.
+ *
+ * The cohort's sequence features read the cohort a bounded number of
+ * times: one join that bounds the records to each member's observation
+ * window, and the cohort index the decorators and `Sequences` read.
  */
 class DecoratorPlanSpec extends SparkSpecBase {
 
@@ -114,7 +119,33 @@ class DecoratorPlanSpec extends SparkSpecBase {
       }.size
       val counts = s"shuffles $shuffles, windows $windows, visit_occurrence scans $visitScans"
       info(counts)
-      assert(shuffles <= 29 && windows <= 11 && visitScans <= 5, counts)
+      assert(shuffles <= 26 && windows <= 11 && visitScans <= 4, counts)
+    }
+  }
+
+  test("cohort sequence features read the cohort at most four times") {
+    withFixedPlans {
+      val cohort = Seq(1L, 2L, 3L, 4L)
+        .map(p => (p, p.toInt, Timestamp.valueOf("2015-06-01 00:00:00"), 0))
+        .toDF("person_id", "cohort_member_id", "index_date", "label")
+        .localCheckpoint()
+      val dependencies = Seq(OmopSchema.Person, OmopSchema.VisitOccurrence)
+        .map(t => t -> Preprocess.domainTable(spark, cdm, t)).toMap
+      val features = new NestedCohortBuilder(NestedCohortBuilder.Config(
+          cohortName = "plan shape",
+          inputFolder = cdm,
+          outputFolder = "",
+          ehrTableList = Seq(OmopSchema.ConditionOccurrence, OmopSchema.DrugExposure),
+          observationWindow = 365,
+          holdOffWindow = 0,
+          predictionStartDays = 1,
+          predictionWindow = 360,
+          isNewPatientRepresentation = true,
+          excludeFeatures = false))
+        .extractEhrRecordsForCohort(spark, cohort, dependencies)
+      val n = reads(features.queryExecution.optimizedPlan, cohort)
+      info(s"cohort reads $n")
+      assert(n >= 1 && n <= 4, s"cohort reads: $n")
     }
   }
 }
