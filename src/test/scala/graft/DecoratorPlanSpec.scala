@@ -31,9 +31,9 @@ import graft.omop.decorators._
  * `visit_occurrence` scans. The bounds are set from the current code; a
  * change that reads an intermediate more than once again fails here.
  *
- * The cohort's sequence features read the cohort a bounded number of
- * times: one join that bounds the records to each member's observation
- * window, and the cohort index the decorators and `Sequences` read.
+ * A cohort's sequence features read the cohort a bounded number of times:
+ * once in the join that bounds the records to each member's observation
+ * window, and through the cohort index that sequence assembly reads.
  */
 class DecoratorPlanSpec extends SparkSpecBase {
 

@@ -50,7 +50,7 @@ class EventsSpec extends SparkSpecBase {
   private def rows(events: DataFrame): Seq[(String, String, String, Any, String, String)] =
     events.select("visit_occurrence_id", "standard_concept_id", "datetime", "number_as_value",
         "concept_as_value", "unit").collect().toSeq
-      .map(r => (String.valueOf(r.get(0)), r.getString(1),
+      .map(r => (r.getString(0), r.getString(1),
         r.getTimestamp(2).toString.stripSuffix(".0"), r.get(3), r.getString(4), r.getString(5)))
       .sortBy(_.toString)
 
