@@ -12,10 +12,14 @@ and runs its own benchmark unchanged.
 
 Prints, per end-to-end metric of the base checkout's BENCHMARK.json: each
 side's median and quartiles, the change's win count over the pairs (a tie
-counts for neither side), and whether the change's median is better than the
-base's by more than the base's quartile distance. The last line says whether
-every run was correct: its result line read `"correct": true` with no failed
-operations.
+counts for neither side), whether the change's median is better than the
+base's by more than the base's quartile distance, and whether it is worse
+than the base's by more than the metric's relative `bound`. Then, per side,
+how many runs made one pass and how many two or more, with the median time
+of the first pass: a run whose first pass ends inside the --seconds budget
+makes a second, warm pass and reports the mean, so wall_s is bimodal when
+one side sits near the budget. The last line says whether every run was
+correct: its result line read `"correct": true` with no failed operations.
 
 --seeds takes a list and ranges: `1-10`, `1,3,5`, `1-4,11`.
 --log appends every run's provenance and result lines as JSON.
@@ -71,6 +75,7 @@ def main():
         metrics = json.load(fh)["end_to_end"]
     sides = {"base": a.base, "change": a.change}
     values = {s: {m["name"]: [] for m in metrics} for s in sides}
+    pass_walls = {s: [] for s in sides}
     pairs = []
     all_correct = True
     for i, seed in enumerate(parse_seeds(a.seeds)):
@@ -81,6 +86,8 @@ def main():
             ok = result is not None and result["correct"] and result["failed"] == 0
             all_correct &= ok
             pair[side] = result["metrics"] if ok else None
+            if ok and provenance:
+                pass_walls[side].append(provenance["pass_walls_s"])
             if a.log:
                 with open(a.log, "a") as fh:
                     fh.write(json.dumps({"side": side, "workload": a.workload, "seed": seed,
@@ -98,7 +105,7 @@ def main():
     if not pairs:
         metrics = []
     print(f"{'metric':<16} {'base median [q1, q3]':<28} {'change median [q1, q3]':<28} "
-          f"{'wins':<7} better by > base IQR")
+          f"{'wins':<7} {'better by > base IQR':<21} worse by > bound")
     for m in metrics:
         name = m["name"]
         bq1, bmed, bq3 = quartiles(values["base"][name])
@@ -109,7 +116,16 @@ def main():
         gain = (bmed - cmed) if lower else (cmed - bmed)
         base = f"{bmed:.3f} [{bq1:.3f}, {bq3:.3f}]"
         change = f"{cmed:.3f} [{cq1:.3f}, {cq3:.3f}]"
-        print(f"{name:<16} {base:<28} {change:<28} {f'{wins}/{len(pairs)}':<7} {gain > bq3 - bq1}")
+        worse = -gain > m["bound"] * bmed
+        print(f"{name:<16} {base:<28} {change:<28} {f'{wins}/{len(pairs)}':<7} "
+              f"{str(gain > bq3 - bq1):<21} {worse}")
+    for side in sides:
+        walls = pass_walls[side]
+        if walls:
+            one = sum(len(w) == 1 for w in walls)
+            first = statistics.median(w[0] for w in walls)
+            print(f"{side} passes: {one} runs with 1, {len(walls) - one} with 2+; "
+                  f"first pass median {first:.3f} s")
     print(f"every run correct: {all_correct}")
     sys.exit(0 if all_correct else 1)
 

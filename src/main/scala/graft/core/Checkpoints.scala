@@ -19,7 +19,8 @@ import org.apache.spark.sql.functions.col
  *    no folder configured the plan is left whole.
  *  - [[stabilityBarrier]] applies where ids come from a nondeterministic
  *    source and must not change on replay: it always cuts lineage, in memory
- *    when no folder is configured.
+ *    when no folder is configured. Its one caller is
+ *    [[graft.omop.tools.ConnectOmopVisits]].
  *  - [[writeSplits]] applies to a result already tagged with a `split`
  *    column that must land as `train/` and `test/` directories.
  */

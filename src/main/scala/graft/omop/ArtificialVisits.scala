@@ -3,9 +3,7 @@ package graft.omop
 import org.apache.spark.sql.{DataFrame, functions => F}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions.{col, lit, when}
-import org.apache.spark.sql.types.{DateType, IntegerType, TimestampType}
-
-import graft.core.Checkpoints
+import org.apache.spark.sql.types.{DateType, TimestampType}
 
 /**
  * Re-link orphan events (null visit_occurrence_id) to overlapping real visits,
@@ -14,16 +12,18 @@ import graft.core.Checkpoints
  * Reference: /root/reference/src/cehrbert_data/utils/spark_utils.py:662-825.
  * Semantics preserved: the candidate window is
  * [date(visit_start), visit_end + 1 day − 1 s]; best match = earliest
- * visit_start (row_number, J7); new ids are minted above max(visit_occurrence_id)
- * via rank over (person_id, date) pairs; artificial visit spans are
- * min/max(datetime); materialization barriers are kept where ids are minted
- * from nondeterministic sources (monotonically_increasing_id), because a
- * replayed task would otherwise mint different ids (SURVEY §7.4 risk 6).
+ * visit_start; new ids are minted above max(visit_occurrence_id) by rank over
+ * (person_id, date) pairs; artificial visit spans are min/max(datetime).
  *
- * Scale note: the reference's id-rank window is global (single partition) —
- * input is only the distinct (person, date) pairs of orphan events, far
- * smaller than events, so this holds; [[graft.operators.IdAllocator]] offers
- * the fully scalable alternative if orphans ever dominate.
+ * The best visit depends only on an orphan's person and datetime, so it is
+ * picked once per distinct (person_id, datetime) and joined back: exact
+ * duplicate orphans stay duplicated, and no per-row id is needed. Every id
+ * comes from the data (the mint ranks distinct keys), so the pass needs no
+ * barrier against replay.
+ *
+ * Deviation: visits that start at the same instant tie in the reference,
+ * which then links to whichever row its window sees first. Here the tie goes
+ * to the lower numeric visit_occurrence_id, whatever the row order.
  */
 object ArtificialVisits {
 
@@ -32,7 +32,6 @@ object ArtificialVisits {
   def construct(
       patientEventsIn: DataFrame,
       visitOccurrence: DataFrame,
-      persistenceFolder: Option[String] = None,
       duplicateRecords: Boolean = false,
       disconnectProblemListRecords: Boolean = false): Result = {
 
@@ -72,62 +71,45 @@ object ArtificialVisits {
         else updated
     }
 
-    var eventsToFix = patientEvents
-      .where(col("visit_occurrence_id").isNull)
-      .withColumn("record_id", F.monotonically_increasing_id())
-    // barrier: record_id must be stable before it keys the matching-rank window
-    eventsToFix = Checkpoints.stabilityBarrier(
-      eventsToFix, persistenceFolder, "events_to_fix/raw_events")
+    val orphans = patientEvents.where(col("visit_occurrence_id").isNull)
+      .drop("visit_occurrence_id", "visit_concept_id")
 
-    val eventCols = eventsToFix.schema.fieldNames
-    val ev = eventsToFix.drop("visit_occurrence_id").alias("event")
-    val vi = visit.alias("visit")
-    val eventsWithVisit = ev.join(vi,
+    // the earliest candidate visit per (person_id, datetime); a null key
+    // matches no visit, so the left join back keeps such orphans unlinked
+    val bestVisit = orphans.select("person_id", "datetime").distinct().alias("event")
+      .join(visit.alias("visit"),
         col("event.person_id") === col("visit.person_id") &&
           col("event.datetime").between(
             col("visit.visit_start_datetime").cast(DateType).cast(TimestampType),
-            F.expr("visit.visit_end_datetime + INTERVAL 1 DAY - INTERVAL 1 SECOND")),
-        "left_outer")
+            F.expr("visit.visit_end_datetime + INTERVAL 1 DAY - INTERVAL 1 SECOND")))
       .withColumn("matching_rank",
-        F.row_number().over(Window.partitionBy("event.record_id")
-          .orderBy("visit.visit_start_datetime")))
+        F.row_number().over(Window.partitionBy("event.person_id", "event.datetime")
+          .orderBy(col("visit.visit_start_datetime"),
+            col("visit.visit_occurrence_id").cast("long"))))
       .where(col("matching_rank") === 1)
-      .select(
-        eventCols.filterNot(c => c == "visit_occurrence_id" || c == "visit_concept_id")
-          .map(c => col(s"event.$c").as(c)).toSeq ++
-          Seq(col("visit.visit_occurrence_id").as("visit_occurrence_id"),
-            col("visit.visit_concept_id").as("visit_concept_id")): _*)
+      .select(col("event.person_id"), col("event.datetime"),
+        col("visit.visit_occurrence_id"), col("visit.visit_concept_id"))
 
-    val linkedEvents = Checkpoints.lineageBarrier(
-      eventsWithVisit.where(col("visit_occurrence_id").isNotNull),
-      persistenceFolder, "events_to_fix/linked_events")
-
-    var orphanEvents = eventsWithVisit.where(col("visit_occurrence_id").isNull)
+    val matched = orphans.join(bestVisit, Seq("person_id", "datetime"), "left_outer")
 
     // max(visit_occurrence_id) + rank over distinct (person, date), with the
-    // max over the NUMERIC value of the id: the reference maxes the raw
-    // string column, which is lexicographic ("999" > "1999") and mints ids
-    // that COLLIDE with real visits — harmless there only because its
-    // ANSI-off union stringifies them as "1000.0", matching no visit, so the
-    // colliding events silently vanish at the sequence join. Minting above
-    // the true max reproduces the same observable outcome (artificial ids
-    // never join the pre-construct visit table) without the latent
-    // cross-patient collision. Broadcast scalar + parallel allocator — no
-    // driver collect(), no single-partition window.
+    // max over the NUMERIC id: the reference maxes the raw string column
+    // ("999" > "1999") and mints ids that collide with real visits, harmless
+    // there only because its ANSI-off union stringifies them ("1000.0") so
+    // they join no visit. Minting above the true max keeps that outcome
+    // without the collision. Parallel allocator, no driver collect().
     val newVisitIds = graft.operators.IdAllocator.allocateAboveMax(
-        orphanEvents.select("person_id", "date").distinct(),
+        matched.where(col("visit_occurrence_id").isNull).select("person_id", "date").distinct(),
         visit.select(col("visit_occurrence_id").cast("long").as("visit_occurrence_id")),
         "visit_occurrence_id",
-        Seq(col("person_id"), col("date")), "visit_occurrence_id")
-      .withColumn("visit_occurrence_id", col("visit_occurrence_id").cast(visitIdType))
+        Seq(col("person_id"), col("date")), "artificial_visit_id")
+      .withColumn("artificial_visit_id", col("artificial_visit_id").cast(visitIdType))
 
-    orphanEvents = orphanEvents.drop("visit_occurrence_id")
-      .join(newVisitIds, Seq("person_id", "date"))
-    orphanEvents = Checkpoints.stabilityBarrier(
-      orphanEvents, persistenceFolder, "events_to_fix/events_artificial_visits")
+    // a linked orphan keeps its visit even where its (person, date) got an id
+    val fixed = matched.join(newVisitIds, Seq("person_id", "date"), "left_outer")
 
-    val artificialVisitsAgg = orphanEvents
-      .groupBy("visit_occurrence_id", "person_id")
+    val artificialVisitsAgg = fixed.where(col("visit_occurrence_id").isNull)
+      .groupBy(col("artificial_visit_id").as("visit_occurrence_id"), col("person_id"))
       .agg(F.min("datetime").as("visit_start_datetime"),
         F.max("datetime").as("visit_end_datetime"))
       .select(
@@ -146,8 +128,10 @@ object ArtificialVisits {
           .map(f => lit(null).cast(f.dataType).as(f.name)).toSeq: _*)
 
     val refreshedEvents = patientEvents.where(col("visit_occurrence_id").isNotNull)
-      .unionByName(linkedEvents.drop("record_id"))
-      .unionByName(orphanEvents.drop("record_id"))
+      .unionByName(fixed
+        .withColumn("visit_occurrence_id",
+          F.coalesce(col("visit_occurrence_id"), col("artificial_visit_id")))
+        .drop("artificial_visit_id"))
 
     Result(refreshedEvents,
       visitOccurrence.unionByName(padded.select(visitOccurrence.columns.map(col): _*)))

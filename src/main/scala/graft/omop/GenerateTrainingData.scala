@@ -20,9 +20,13 @@ import graft.functions.TimeTokens.AttType
  *  - the events↔visit join shuffles on visit_occurrence_id; person-level
  *    windows shuffle on (person_id, cohort_member_id) — all high-cardinality;
  *  - the age<90 privacy filter and concept-list semi-join run BEFORE sequence
- *    assembly so the expensive collect_set sees only surviving rows;
+ *    assembly so the expensive collect_list sees only surviving rows;
  *  - no visit-id check before extraction (the inner events↔visit join drops
- *    the same events), and no numeric-event cache (see [[Events]]).
+ *    the same events), and no numeric-event cache (see [[Events]]);
+ *  - [[ArtificialVisits.construct]] runs only with both
+ *    `shouldConstructArtificialVisits` and `disconnectProblemListRecords`:
+ *    the inner events↔visit join leaves it no orphan otherwise, and it would
+ *    return its input after a visit scan, a window and the id mint's jobs.
  */
 object GenerateTrainingData {
 
@@ -91,11 +95,10 @@ object GenerateTrainingData {
     // filter (generate_training_data.py:158-167). Parity note: like the
     // reference, the visit-person table used later for sequence assembly is
     // the PRE-construct one — artificial visits exist only on the events.
-    if (cfg.shouldConstructArtificialVisits)
+    if (cfg.shouldConstructArtificialVisits && cfg.disconnectProblemListRecords)
       patientEvents = ArtificialVisits.construct(patientEvents, visitSlim,
-        persistenceFolder = cfg.outputFolder,
         duplicateRecords = cfg.duplicateRecords,
-        disconnectProblemListRecords = cfg.disconnectProblemListRecords).patientEvents
+        disconnectProblemListRecords = true).patientEvents
 
     if (cfg.applyAgeFilter)
       patientEvents = patientEvents.where(col("age") < 90)

@@ -18,10 +18,13 @@ import graft.omop.decorators._
  * Critical ordering semantic (SURVEY §1.3): `sort_array` on array<struct>
  * sorts lexicographically by field position, so `order` (a row_number over
  * (visit_rank_order, concept_order, priority, datetime, standard_concept_id))
- * MUST stay the first struct field, and `collect_set` dedup of identical
- * structs is load-bearing. Field order below matches the reference exactly.
+ * MUST stay the first struct field. Field order below matches the reference
+ * exactly. The reference collects with `collect_set`, but no two structs of a
+ * group are equal: `order` is a row_number over the same
+ * (cohort_member_id, person_id) the aggregation groups on. So `collect_list`
+ * keeps the same elements without hashing each struct.
  *
- * Scale: the struct-pack + collect_set aggregation shuffles once on
+ * Scale: the struct-pack + collect_list aggregation shuffles once on
  * (cohort_member_id, person_id) — the natural high-cardinality key; windows
  * use the same key, so with AQE the shuffle is reused. Nothing here requires
  * a global window.
@@ -111,7 +114,7 @@ object Sequences {
       .withColumn("data_for_sorting", F.struct(structColumns.map(col): _*))
       .groupBy("cohort_member_id", "person_id")
       .agg(
-        F.sort_array(F.collect_set(col("data_for_sorting"))).as("data_for_sorting"),
+        F.sort_array(F.collect_list(col("data_for_sorting"))).as("data_for_sorting"),
         F.max("visit_rank_order").as("num_of_visits"),
         F.count("standard_concept_id").as("num_of_concepts"))
 
@@ -201,7 +204,7 @@ object Sequences {
       .withColumn("date_concept_id_period", F.struct(structColumns.map(col): _*))
       .groupBy("person_id", "cohort_member_id")
       .agg(
-        F.sort_array(F.collect_set(col("date_concept_id_period"))).as("date_concept_id_period"),
+        F.sort_array(F.collect_list(col("date_concept_id_period"))).as("date_concept_id_period"),
         F.min("earliest_visit_date").as("earliest_visit_date"),
         F.max("date").as("max_event_date"),
         F.max("visit_rank_order").as("num_of_visits"),

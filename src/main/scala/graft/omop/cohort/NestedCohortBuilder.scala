@@ -213,7 +213,6 @@ final class NestedCohortBuilder(cfg: NestedCohortBuilder.Config) {
       val person = dependencies("person")
       val demographic = person.select(col("person_id"), Preprocess.birthDatetime.as("birth_datetime"))
       val result = ArtificialVisits.construct(ehrRecords, visitOccurrence,
-        persistenceFolder = cacheFolder,
         duplicateRecords = cfg.duplicateRecords,
         disconnectProblemListRecords = cfg.disconnectProblemListRecords)
       visitOccurrence = result.visitOccurrence

@@ -158,7 +158,6 @@ object ExtractFeatures {
 
     if (cfg.shouldConstructArtificialVisits) {
       val result = ArtificialVisits.construct(ehrRecords, visitOccurrence,
-        persistenceFolder = Some(cohortFolder),
         duplicateRecords = cfg.duplicateRecords,
         disconnectProblemListRecords = cfg.disconnectProblemListRecords)
       visitOccurrence = result.visitOccurrence

@@ -29,7 +29,10 @@ import graft.omop.decorators._
  * The pipeline without barriers (`GenerateTrainingData.run` with no output
  * folder) is bounded in shuffle exchanges, window operators and
  * `visit_occurrence` scans. The bounds are set from the current code; a
- * change that reads an intermediate more than once again fails here.
+ * change that reads an intermediate more than once again fails here. By
+ * default the pipeline skips `ArtificialVisits.construct`, which has no
+ * orphan to act on; with `disconnectProblemListRecords` it runs, and a
+ * second case bounds the pipeline with it.
  *
  * A cohort's sequence features read the cohort a bounded number of times:
  * once in the join that bounds the records to each member's observation
@@ -106,20 +109,34 @@ class DecoratorPlanSpec extends SparkSpecBase {
     }
   }
 
+  /** Shuffle exchanges, window operators and `visit_occurrence` scans in the
+    * executed plan of `GenerateTrainingData.run` under `config`. */
+  private def pipelineCounts(config: GenerateTrainingData.Config): (Int, Int, Int) = {
+    val plan: SparkPlan = GenerateTrainingData
+      .run(spark, config.copy(inputFolder = cdm), gptPatientSequence = true)
+      .queryExecution.executedPlan
+    val shuffles = plan.collect { case e: ShuffleExchangeExec => e }.size
+    val windows = plan.collect { case w: WindowExec => w }.size
+    val visitScans = plan.collect {
+      case s: FileSourceScanExec
+          if s.relation.location.rootPaths.exists(_.getName == OmopSchema.VisitOccurrence) => s
+    }.size
+    info(s"shuffles $shuffles, windows $windows, visit_occurrence scans $visitScans")
+    (shuffles, windows, visitScans)
+  }
+
   test("the pipeline without barriers stays small: shuffles, windows, visit scans") {
     withFixedPlans {
-      val plan: SparkPlan = GenerateTrainingData
-        .run(spark, cfg.copy(inputFolder = cdm), gptPatientSequence = true)
-        .queryExecution.executedPlan
-      val shuffles = plan.collect { case e: ShuffleExchangeExec => e }.size
-      val windows = plan.collect { case w: WindowExec => w }.size
-      val visitScans = plan.collect {
-        case s: FileSourceScanExec
-            if s.relation.location.rootPaths.exists(_.getName == OmopSchema.VisitOccurrence) => s
-      }.size
-      val counts = s"shuffles $shuffles, windows $windows, visit_occurrence scans $visitScans"
-      info(counts)
-      assert(shuffles <= 26 && windows <= 11 && visitScans <= 4, counts)
+      val (shuffles, windows, visitScans) = pipelineCounts(cfg)
+      assert(shuffles <= 22 && windows <= 10 && visitScans <= 3)
+    }
+  }
+
+  test("with problem-list records disconnected, artificial visits stay small too") {
+    withFixedPlans {
+      val (shuffles, windows, visitScans) =
+        pipelineCounts(cfg.copy(disconnectProblemListRecords = true))
+      assert(shuffles <= 38 && windows <= 11 && visitScans <= 7)
     }
   }
 

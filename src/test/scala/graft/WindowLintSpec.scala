@@ -24,6 +24,10 @@ import org.scalatest.funsuite.AnyFunSuite
  *
  * No constant-key window (`Window.partitionBy(lit(...))`): it is an
  * unpartitioned window under another name.
+ *
+ * No `monotonically_increasing_id` in the OMOP code: its values depend on
+ * the partitioning, so a replayed task or another plan mints other ids. Ids
+ * are minted from the data through `IdAllocator`.
  */
 class WindowLintSpec extends AnyFunSuite {
 
@@ -64,6 +68,12 @@ class WindowLintSpec extends AnyFunSuite {
     assert(found.isEmpty,
       s"materialize through graft.core.Checkpoints (barriers, writeSplits, exists/status):\n" +
         found.mkString("\n"))
+  }
+
+  test("the OMOP pipelines mint no id from monotonically_increasing_id") {
+    val found = offenders(Seq("src/main/scala/graft/omop"))(_.contains("monotonically_increasing_id"))
+    assert(found.isEmpty,
+      s"nondeterministic id source in the OMOP pipelines:\n${found.mkString("\n")}")
   }
 
   test("no cache, persist or constant-key window in the OMOP pipelines") {

@@ -65,6 +65,18 @@ class ArtificialVisitsSpec extends SparkSpecBase {
     assert(mintedVisits(result, vo).isEmpty)
   }
 
+  test("an orphan inside two visits with one start links to the lower id, in either row order") {
+    // "9" is the numeric minimum but not the lexicographic one
+    val rows = Seq(
+      ("9", "1", "9201", "2015-01-10 00:00:00", "2015-01-12 16:00:00"),
+      ("11", "1", "9202", "2015-01-10 00:00:00", "2015-01-11 16:00:00"))
+    val ev = events(("1", "320128", "2015-01-11 10:00:00", null, null))
+    for (vo <- Seq(visits(rows: _*), visits(rows.reverse: _*))) {
+      assert(eventRows(ArtificialVisits.construct(ev, vo).patientEvents) == Seq(
+        ("1", "320128", "2015-01-11 10:00:00", "9", "9201")))
+    }
+  }
+
   test("orphans mint one visit per day above the numeric maximum id") {
     // "999" is the lexicographic maximum, 1999 the numeric one
     val vo = visits(
