@@ -9,6 +9,7 @@ name and rows by value, and compares cell-by-cell.
 """
 import json
 import math
+import re
 import sys
 
 import duckdb
@@ -60,9 +61,9 @@ def main(sf_dir, out_dir):
         # (round-15 pack1_token_chunks). Flag physical-type divergence hard —
         # except timestamp UNIT (us vs ns), which the driver's hash
         # normalizes (sq5 has always passed with oracle us vs spark ns).
+        # The time zone is kept: tz-aware vs tz-naive fails the driver's hash.
         def tnorm(t):
-            s = str(t)
-            return "timestamp" if s.startswith("timestamp") else s
+            return re.sub(r"timestamp\[(us|ns)", "timestamp[", str(t))
         tdiff = [(c, str(want.schema.field(c).type), str(got.schema.field(c).type))
                  for c in wcols
                  if tnorm(want.schema.field(c).type) != tnorm(got.schema.field(c).type)]

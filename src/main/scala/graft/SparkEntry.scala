@@ -30,11 +30,7 @@ object SparkEntry {
 
   private def T(s: SparkSession, dir: String, n: String): DataFrame = {
     GraftSession.tune(s)
-    // opt-in bucketed layout (off by default — see Tables.BucketedLayoutConf):
-    // when enabled and materialized FOR THIS dir with the raw-load
-    // convention, key-aligned groupBy/join/window plans start
-    // pre-partitioned and skip their leading exchange
-    Tables.bucketedLayout(s, n, dir, "raw").getOrElse(Tables.load(s, dir, n))
+    Tables.load(s, dir, n)
   }
 
   /** Flagship query on sf=0.001; driver smoke-checks rows>0. */

@@ -14,8 +14,8 @@ import org.apache.spark.sql.types.StructType
  * anti-/band-join of the (small) micro-batch against the (ever-growing)
  * ledger. A plain parquet ledger re-SHUFFLES the entire stream history into
  * that join every batch — O(history) per batch, unbounded. Stored as a
- * catalog bucketed table on the join key ([[graft.core.Bucketing]]
- * semantics), the ledger side is pre-partitioned ON DISK: the join reads
+ * catalog bucketed table on the join key (`DataFrameWriter.bucketBy`),
+ * the ledger side is pre-partitioned ON DISK: the join reads
  * matching buckets in place and only the micro-batch side moves — per-batch
  * cost O(batch + ledger-scan), with no history shuffle. (At small ledger
  * sizes Spark may broadcast the ledger instead — also shuffle-free; the

@@ -28,6 +28,9 @@ import org.scalatest.funsuite.AnyFunSuite
  * No `monotonically_increasing_id` in the OMOP code: its values depend on
  * the partitioning, so a replayed task or another plan mints other ids. Ids
  * are minted from the data through `IdAllocator`.
+ *
+ * Every `spark.graft.*` conf is read through [[graft.core.Tunables]], so the
+ * engine has one config surface and each read lands in `Decisions`.
  */
 class WindowLintSpec extends AnyFunSuite {
 
@@ -36,21 +39,28 @@ class WindowLintSpec extends AnyFunSuite {
     "src/main/scala/graft/omop")
 
   /** `file:line: text` of every non-comment line under `dirs` that `bad`
-    * accepts, skipping files named in `exempt`. */
-  private def offenders(dirs: Seq[String], exempt: Set[String] = Set.empty)(
-      bad: String => Boolean): Seq[String] =
+    * accepts, skipping files named in `exempt`. `bad` sees the line and the
+    * one before it (empty for a file's first line). */
+  private def pairOffenders(dirs: Seq[String], exempt: Set[String] = Set.empty)(
+      bad: (String, String) => Boolean): Seq[String] =
     dirs.flatMap { dir =>
       Files.walk(Paths.get(dir)).iterator().asScala
         .filter(_.toString.endsWith(".scala"))
         .filterNot(p => exempt.contains(p.getFileName.toString))
         .flatMap { p =>
-          Files.readAllLines(p).asScala.zipWithIndex.collect {
-            case (line, i)
-                if bad(line) && !line.trim.startsWith("//") && !line.trim.startsWith("*") =>
-              s"$p:${i + 1}: ${line.trim}"
+          val lines = Files.readAllLines(p).asScala.toIndexedSeq
+          lines.indices.collect {
+            case i if bad(lines(i), if (i == 0) "" else lines(i - 1)) &&
+                !lines(i).trim.startsWith("//") && !lines(i).trim.startsWith("*") =>
+              s"$p:${i + 1}: ${lines(i).trim}"
           }
         }
     }
+
+  /** [[pairOffenders]] for a check that looks at the line alone. */
+  private def offenders(dirs: Seq[String], exempt: Set[String] = Set.empty)(
+      bad: String => Boolean): Seq[String] =
+    pairOffenders(dirs, exempt)((line, _) => bad(line))
 
   test("no raw unpartitioned Window.orderBy in tools or pipelines") {
     // IdAllocator itself owns the documented single-partition variant
@@ -84,5 +94,16 @@ class WindowLintSpec extends AnyFunSuite {
     assert(found.isEmpty,
       s"materialize through graft.core.Checkpoints; mint global ids through IdAllocator:\n" +
         found.mkString("\n"))
+  }
+
+  test("every spark.graft.* conf is read through Tunables") {
+    // the key literal sits in the Tunables.long( call or on the line after it
+    val found = pairOffenders(Seq("src/main/scala/graft"), exempt = Set("Tunables.scala")) {
+      (line, prev) =>
+        line.contains("\"spark.graft.") &&
+          !line.contains("Tunables.long(") && !prev.contains("Tunables.long(")
+    }
+    assert(found.isEmpty,
+      s"read spark.graft.* confs through graft.core.Tunables:\n${found.mkString("\n")}")
   }
 }
